@@ -16,9 +16,12 @@ Spark-first design decisions (NOT a port):
 - Missing values are native SQL NULLs — the reference's ``-1234`` sentinel
   (reference :223) is an implementation artifact that would corrupt data and
   is deliberately NOT replicated (SURVEY.md §7.3 #4).
-- The feature matrix is built once, min-max scaled, and CACHED — it is
-  re-read once per imputed column (the reference copies it per column,
-  :235).
+- The feature matrix is built once per call (``fit``, ``transform`` or
+  ``validate``), min-max scaled, and materialized with an eager
+  ``localCheckpoint`` — every imputed column reads that one copy (the
+  reference copies it per column, :235).
+- NaN in a float/double column (pandas' missing marker, so the reference's)
+  is read as NULL wherever data enters: the constructor and ``validate``.
 - Models are MLlib Pipelines (VectorAssembler + user estimator), persisted
   with MLlib writers + a JSON manifest instead of a joblib pickle
   (reference :297).
@@ -49,7 +52,6 @@ from scikit_learn_imputer_spark.functions.stats import (
     imputation_variance_long,
 )
 from scikit_learn_imputer_spark.operators.encode import (
-    distinct_values,
     label_decode,
     label_encode,
     one_hot,
@@ -124,10 +126,7 @@ class SparkImputer:
                 "The directory specified in save_models_to does not exist"
             )
 
-        if id_col not in input_data.columns:
-            raise KeyError(f"id_col '{id_col}' is not in data frame")
-
-        self.input_data = input_data
+        self.input_data = _checked_input(input_data, id_col)
         self.categorical = categorical
         self.save_models_to = save_models_to
         self.round_column = round_column
@@ -140,28 +139,26 @@ class SparkImputer:
     def missing_indicator(self) -> DataFrame:
         """One boolean ``<col>_flag`` per data column (reference :109-115),
         keyed by id instead of positional index."""
-        return missing_indicator(
-            self.input_data, self._data_cols(), keep=[self.id_col]
-        )
+        return missing_indicator(self.input_data, keep=[self.id_col])
 
     # ------------------------------------------------------------------ C3
     def missing_metrics(self) -> DataFrame:
         """(variable, observed, missing, total, imputation_rate) per column
         (reference :117-138) — ONE distributed aggregate pass."""
-        return missing_metrics(self.input_data, self._data_cols())
+        return missing_metrics(
+            self.input_data, self._data_cols(self.input_data)
+        )
 
     # ------------------------------------------------------------------ C4
-    def create_features(self) -> DataFrame:
+    def create_features(self, data: DataFrame | None = None) -> DataFrame:
         """ffill/bfill → cardinality prune → one-hot → optional missing
-        flags (reference :140-176). Returns a flat numeric frame keyed by
-        id — flat named columns keep it oracle-checkable."""
-        cols = (
-            [c for c in self.features if c != self.id_col]
-            if self.features
-            else self._data_cols()
-        )
+        flags (reference :140-176) of ``data`` (default: ``input_data``).
+        Returns a flat numeric frame keyed by id — flat named columns keep
+        it oracle-checkable."""
+        data = self.input_data if data is None else data
+        cols = [c for c in self.features or data.columns if c != self.id_col]
         categorical = [c for c in self.categorical if c in cols]
-        df = self.input_data.select(self.id_col, *cols)
+        df = data.select(self.id_col, *cols)
 
         filled = ffill_bfill(df, self.id_col, cols)
 
@@ -178,25 +175,30 @@ class SparkImputer:
         encoded = one_hot(filled, keep_cats)
 
         if self.include_missing_flags:
-            flags = self.missing_indicator()
-            flag_cols = [
-                F.col(c).cast("int").alias(c)
-                for c in flags.columns
-                if c != self.id_col
-            ]
-            flags_int = flags.select(F.col(self.id_col), *flag_cols)
-            encoded = encoded.join(flags_int, on=self.id_col, how="inner")
+            flags = missing_indicator(data, keep=[self.id_col])
+            encoded = encoded.join(flags, on=self.id_col, how="inner")
 
-        # Cast everything numeric to double so the assembled vector is
-        # homogeneous and the scaler is a plain projection.
+        # Cast everything (flags included) to double so the assembled vector
+        # is homogeneous and the scaler is a plain projection.
         return encoded.select(
             F.col(self.id_col),
-            *[
-                F.col(c).cast("double").alias(c)
-                for c in encoded.columns
-                if c != self.id_col
-            ],
+            *[F.col(c).cast("double").alias(c) for c in self._data_cols(encoded)],
         )
+
+    def _features(self, data: DataFrame) -> DataFrame:
+        """``create_features(data)``, min-max scaled, materialized once."""
+        features = self.create_features(data)
+        feat_cols = self._data_cols(features)
+        # Eager materialization, not a lazy cache(): the per-column fits
+        # run CONCURRENTLY from fit's thread pool, and a lazy cache
+        # fills per-partition with no cross-thread synchronization — all
+        # columns' first jobs recompute the whole ffill/one-hot/scale
+        # pipeline before any cache entry lands (the _loader_funnel_base
+        # race, measured here as ~3x the feature-pass cost at bench SF).
+        # At 100 TB this is the feature-matrix materialization every
+        # production imputation run makes anyway; the checkpointed RDD is
+        # released by ContextCleaner when the frame goes out of scope.
+        return minmax_scale(features, feat_cols).localCheckpoint(eager=True)
 
     # ------------------------------------------------------------------ C5
     def fit(
@@ -206,7 +208,6 @@ class SparkImputer:
         transform: bool = False,
         test_size: float = 0.1,
         random_seed: int = 42,
-        scaler=None,
         parallelism: int = 4,
     ) -> dict:
         """Train one model per column with missing values; optionally impute
@@ -218,8 +219,8 @@ class SparkImputer:
         per-column maps ``{column_name: estimator, "*": default}`` when
         different targets warrant different models (extends the
         reference's one-estimator-for-all-columns surface, :241-245).
-        ``scaler`` defaults to the pure-SQL min-max scaler; pass a callable
-        ``(df, cols) -> df`` to substitute.
+        Features are always min-max scaled, the one scaling ``transform``
+        and ``validate`` re-apply.
 
         Per-column models are INDEPENDENT (reference runs them in a
         sequential loop, :216); ``parallelism`` > 1 trains them from a
@@ -229,22 +230,9 @@ class SparkImputer:
         """
         start_overall = time.time()
 
-        all_features = self.create_features()
-        feat_cols = [c for c in all_features.columns if c != self.id_col]
-        scale = scaler or minmax_scale
-        # Eager materialization, not a lazy cache(): the per-column fits
-        # run CONCURRENTLY from the thread pool below, and a lazy cache
-        # fills per-partition with no cross-thread synchronization — all
-        # columns' first jobs recompute the whole ffill/one-hot/scale
-        # pipeline before any cache entry lands (the _loader_funnel_base
-        # race, measured here as ~3x the feature-pass cost at bench SF).
-        # At 100 TB this is the feature-matrix materialization every
-        # production imputation run makes anyway; the checkpointed RDD is
-        # released by ContextCleaner when the frame goes out of scope.
-        features = scale(all_features, feat_cols).localCheckpoint(eager=True)
-
-        info = self.missing_metrics().filter(F.col("missing") > 0)
-        to_impute = [r["variable"] for r in info.select("variable").collect()]
+        to_impute = self._columns_with_missing()
+        features = self._features(self.input_data)
+        feat_cols = self._data_cols(features)
 
         def train(column: str) -> dict:
             start_time = time.time()
@@ -266,24 +254,15 @@ class SparkImputer:
         else:
             trained_models = {c: train(c) for c in to_impute}
 
-        imputed = self.input_data if transform else None
-        if transform:
-            for column in to_impute:
-                record = trained_models[column]
-                start_imp = time.time()
-                imputed = self._impute_column(imputed, column, features, record)
-                record["impute_time"] = time.time() - start_imp
-
         trained_models["global_scaler"] = {"type": "minmax", "columns": feat_cols}
-
-        if not transform:
-            self._save_models(trained_models, feat_cols)
-
         if transform:
-            trained_models["imputed_data"] = imputed
+            trained_models["imputed_data"] = self._impute(
+                features, trained_models, to_impute
+            )
+        else:
+            self._save_models(trained_models, to_impute)
 
         trained_models["overall_time"] = time.time() - start_overall
-        features.unpersist()
         return trained_models
 
     def _fit_one(
@@ -298,15 +277,7 @@ class SparkImputer:
         # Leakage prune replicates the reference's SUBSTRING semantics
         # (reference :236 — drops the target, its one-hot/flag derivatives,
         # and any accidental substring match; SURVEY.md P8).
-        model_features = [
-            c for c in features.columns
-            if c != self.id_col and column not in c
-        ]
-
-        target = self.input_data.select(
-            F.col(self.id_col), F.col(column).alias("__target")
-        )
-        observed = target.filter(F.col("__target").isNotNull())
+        model_features = [c for c in self._data_cols(features) if column not in c]
 
         if is_cat:
             # Bounded label collect: features are gated by class_threshold
@@ -318,7 +289,8 @@ class SparkImputer:
             # and the collect is exact.
             cap = self.class_threshold
             distinct = (
-                observed.select("__target").distinct().limit(cap + 1).collect()
+                self.input_data.select(column).dropna().distinct()
+                .limit(cap + 1).collect()
             )
             if len(distinct) > cap:
                 raise ValueError(
@@ -327,15 +299,9 @@ class SparkImputer:
                     f"class_threshold or drop the column"
                 )
             labels = sorted(r[0] for r in distinct)
-            encoded, _ = label_encode(
-                observed, "__target", labels=labels, out_col="label"
-            )
-            observed = encoded.select(self.id_col, "label")
         else:
             labels = None
-            observed = observed.select(
-                self.id_col, F.col("__target").cast("double").alias("label")
-            )
+        observed = self._labels(self.input_data, column, labels)
 
         train_keys, test_keys = split_exact(
             observed, test_size, random_seed, self.id_col
@@ -364,22 +330,10 @@ class SparkImputer:
         pipeline_model = Pipeline(stages=[assembler, est]).fit(train)
 
         start_test = time.time()
-        test = test_keys.join(features, on=self.id_col, how="inner")
-        preds = pipeline_model.transform(test)
-        pred_col = F.col("prediction")
-        if column in self.round_column:
-            pred_col = F.bround(pred_col)  # np.round = half-to-even
-        scored = preds.select(F.col("label"), pred_col.alias("prediction"))
-        if is_cat:
-            perf = scored.agg(
-                F.avg((F.col("prediction") == F.col("label")).cast("double"))
-            ).collect()[0][0]
-            model_performance = {"accuracy": perf}
-        else:
-            perf = scored.agg(
-                F.avg(F.pow(F.col("prediction") - F.col("label"), 2))
-            ).collect()[0][0]
-            model_performance = {"mse": perf}
+        preds = self._predict(
+            column, pipeline_model, model_features, test_keys, features
+        )
+        model_performance = _score(preds, is_cat)
         test_time = time.time() - start_test
 
         return {
@@ -390,42 +344,80 @@ class SparkImputer:
             "model_performance": model_performance,
         }
 
-    def _impute_column(
-        self, imputed: DataFrame, column: str, features: DataFrame, record: dict
-    ) -> DataFrame:
-        """Predict the missing rows of one column and scatter-update them
-        into the running imputed frame (reference :261-272)."""
-        missing_keys = self.input_data.filter(F.col(column).isNull()).select(
-            self.id_col
+    def _labels(self, data: DataFrame, column: str, labels) -> DataFrame:
+        """(id, label) for the observed cells of ``column``: the code in
+        ``labels`` for a categorical target, else the value as a double."""
+        observed = data.select(
+            F.col(self.id_col), F.col(column).alias("__target")
+        ).filter(F.col("__target").isNotNull())
+        if labels is None:
+            return observed.select(
+                self.id_col, F.col("__target").cast("double").alias("label")
+            )
+        encoded, _ = label_encode(
+            observed, "__target", labels=labels, out_col="label"
         )
-        impute_rows = missing_keys.join(features, on=self.id_col, how="inner")
-        preds = record["trained_model"].transform(impute_rows)
+        return encoded.select(self.id_col, "label")
+
+    def _predict(
+        self, column, model, model_features, keys: DataFrame,
+        features: DataFrame,
+    ) -> DataFrame:
+        """``keys`` plus the model's ``prediction`` for each key, rounded
+        half-to-even (np.round, reference :251) for round columns. The
+        features are re-projected to exactly the model's saved feature list
+        (reference :339-340, SURVEY.md P10)."""
+        rows = keys.join(
+            features.select(self.id_col, *model_features),
+            on=self.id_col, how="inner",
+        )
         pred = F.col("prediction")
         if column in self.round_column:
             pred = F.bround(pred)
-        preds = preds.select(F.col(self.id_col), pred.alias("prediction"))
-        if record["label_encoder"] is not None:
-            preds = label_decode(
-                preds, "prediction", record["label_encoder"]
-            )
-        target_type = dict(self.input_data.dtypes)[column]
-        updates = preds.select(
-            F.col(self.id_col),
-            F.col("prediction").cast(target_type).alias(column),
+        return model.transform(rows).select(
+            *keys.columns, pred.alias("prediction")
         )
-        return scatter_update(imputed, updates, self.id_col, column)
 
-    def _save_models(self, trained_models: dict, feat_cols: list[str]) -> None:
+    def _impute(self, features: DataFrame, records: dict, columns) -> DataFrame:
+        """Predict the NULL cells of each column and scatter-update them
+        into the input, in column order (reference :261-272); sets each
+        record's ``impute_time``."""
+        dtypes = dict(self.input_data.dtypes)
+        imputed = self.input_data
+        for column in columns:
+            start = time.time()
+            record = records[column]
+            missing_keys = self.input_data.filter(
+                F.col(column).isNull()
+            ).select(self.id_col)
+            preds = self._predict(
+                column, record["trained_model"], record["model_features"],
+                missing_keys, features,
+            )
+            if record["label_encoder"] is not None:
+                preds = label_decode(
+                    preds, "prediction", record["label_encoder"]
+                )
+            updates = preds.select(
+                F.col(self.id_col),
+                F.col("prediction").cast(dtypes[column]).alias(column),
+            )
+            imputed = scatter_update(imputed, updates, self.id_col, column)
+            record["impute_time"] = time.time() - start
+        return imputed
+
+    def _save_models(self, trained_models: dict, columns: list[str]) -> None:
         """MLlib writers + JSON manifest replace the joblib pickle
         (reference :297 / SURVEY.md S3)."""
         os.makedirs(self.save_models_to, exist_ok=True)
-        manifest: dict = {"columns": [], "global_scaler": trained_models["global_scaler"]}
-        for column, record in trained_models.items():
-            if column in ("global_scaler", "overall_time", "imputed_data"):
-                continue
+        manifest: dict = {
+            "columns": columns,
+            "global_scaler": trained_models["global_scaler"],
+        }
+        for column in columns:
+            record = trained_models[column]
             model_dir = os.path.join(self.save_models_to, f"model_{column}")
             record["trained_model"].write().overwrite().save(model_dir)
-            manifest["columns"].append(column)
             manifest[column] = {
                 "model_features": record["model_features"],
                 "label_encoder": record["label_encoder"],
@@ -437,17 +429,18 @@ class SparkImputer:
         with open(os.path.join(self.save_models_to, "manifest.json"), "w") as f:
             json.dump(manifest, f, indent=2)
 
-    def _load_models(self) -> dict:
+    def _load_models(self, data: DataFrame) -> dict:
+        """The saved records of the columns ``data`` has, in saved order."""
         from pyspark.ml import PipelineModel
 
         with open(os.path.join(self.save_models_to, "manifest.json")) as f:
             manifest = json.load(f)
         out = {}
         for column in manifest["columns"]:
-            rec = dict(manifest[column])
-            rec["trained_model"] = PipelineModel.load(rec["model_dir"])
-            out[column] = rec
-        out["global_scaler"] = manifest["global_scaler"]
+            if column in data.columns:
+                rec = dict(manifest[column])
+                rec["trained_model"] = PipelineModel.load(rec["model_dir"])
+                out[column] = rec
         return out
 
     # ------------------------------------------------------------------ C6
@@ -457,31 +450,12 @@ class SparkImputer:
         data (reference :323 — the persisted scaler's ranges are never
         reused), which here is simply scaling against current min/max."""
         start_overall = time.time()
-        trained = self._load_models()
-        to_impute = [
-            c for c in trained if c != "global_scaler"
-            and c in self.input_data.columns
-        ]
-
-        all_features = self.create_features()
-        feat_cols = [c for c in all_features.columns if c != self.id_col]
-        features = minmax_scale(all_features, feat_cols).cache()
-
-        impute_times: dict = {}
-        imputed = self.input_data
-        for column in to_impute:
-            start = time.time()
-            record = trained[column]
-            # Re-project to exactly the saved model's feature list
-            # (reference :339-340, SURVEY.md P10).
-            feats = features.select(self.id_col, *record["model_features"])
-            imputed = self._impute_column(imputed, column, feats, record)
-            impute_times[column] = time.time() - start
-
-        features.unpersist()
+        records = self._load_models(self.input_data)
+        features = self._features(self.input_data)
+        imputed = self._impute(features, records, list(records))
         return {
             "imputed_data": imputed,
-            "impute_times": impute_times,
+            "impute_times": {c: r["impute_time"] for c, r in records.items()},
             "overall_time": time.time() - start_overall,
         }
 
@@ -520,65 +494,24 @@ class SparkImputer:
         validation_set provides both features and targets.
         """
         start_overall = time.time()
-        trained = self._load_models()
-        to_impute = [
-            c for c in trained if c != "global_scaler"
-            and c in validation_set.columns
-        ]
-
-        holdout = SparkImputer(
-            validation_set,
-            categorical=self.categorical,
-            save_models_to=self.save_models_to,
-            round_column=self.round_column,
-            class_threshold=self.class_threshold,
-            features=self.features,
-            include_missing_flags=self.include_missing_flags,
-            id_col=self.id_col,
-        )
-        all_features = holdout.create_features()
-        feat_cols = [c for c in all_features.columns if c != self.id_col]
-        features = minmax_scale(all_features, feat_cols).cache()
+        validation_set = _checked_input(validation_set, self.id_col)
+        records = self._load_models(validation_set)
+        features = self._features(validation_set)
 
         output = {}
-        for column in to_impute:
+        for column, record in records.items():
             start = time.time()
-            record = trained[column]
-            observed = validation_set.filter(F.col(column).isNotNull()).select(
-                F.col(self.id_col), F.col(column).alias("__truth")
+            labels = self._labels(
+                validation_set, column, record["label_encoder"]
             )
-            feats = features.select(self.id_col, *record["model_features"])
-            rows = observed.join(feats, on=self.id_col, how="inner")
-            preds = record["trained_model"].transform(rows)
-            pred = F.col("prediction")
-            if column in self.round_column:
-                pred = F.bround(pred)
-            preds = preds.select(self.id_col, "__truth", pred.alias("prediction"))
-            if column in self.categorical:
-                labels = record["label_encoder"]
-                preds = label_decode(preds, "prediction", labels)
-                acc = preds.agg(
-                    F.avg(
-                        (F.col("prediction") == F.col("__truth")).cast("double")
-                    )
-                ).collect()[0][0]
-                model_performance = {"accuracy": acc}
-            else:
-                mse = preds.agg(
-                    F.avg(
-                        F.pow(
-                            F.col("prediction") - F.col("__truth").cast("double"),
-                            2,
-                        )
-                    )
-                ).collect()[0][0]
-                model_performance = {"mse": mse}
+            preds = self._predict(
+                column, record["trained_model"], record["model_features"],
+                labels, features,
+            )
             output[column] = {
-                "model_performance": model_performance,
+                "model_performance": _score(preds, column in self.categorical),
                 "test_time": time.time() - start,
             }
-
-        features.unpersist()
         return {"overall_time": time.time() - start_overall, "tests": output}
 
     # ------------------------------------------------------------------ C8
@@ -588,8 +521,7 @@ class SparkImputer:
         model size, per-column mse/accuracy; rank every metric
         (pandas-average-rank semantics) and sum the performance ranks."""
         spark = self.input_data.sparkSession
-        info = self.missing_metrics().filter(F.col("missing") > 0)
-        to_impute = [r["variable"] for r in info.select("variable").collect()]
+        to_impute = self._columns_with_missing()
         mse_cols = [f"{c}_mse" for c in to_impute if c not in self.categorical]
         acc_cols = [f"{c}_accuracy" for c in to_impute if c in self.categorical]
 
@@ -664,8 +596,40 @@ class SparkImputer:
         return summary
 
     # ------------------------------------------------------------------ util
-    def _data_cols(self) -> list[str]:
-        return [c for c in self.input_data.columns if c != self.id_col]
+    def _data_cols(self, data: DataFrame) -> list[str]:
+        return [c for c in data.columns if c != self.id_col]
+
+    def _columns_with_missing(self) -> list[str]:
+        """The columns to impute, in data order. Each needs two observed
+        cells, one to train on and one to score on; the counts come from
+        the same collect that lists the columns."""
+        info = self.missing_metrics().filter(F.col("missing") > 0).collect()
+        for r in info:
+            if r["observed"] < 2:
+                raise ValueError(
+                    f"column '{r['variable']}' has {r['observed']} observed "
+                    f"value(s); imputing it needs at least 2"
+                )
+        return [r["variable"] for r in info]
+
+
+def _checked_input(data: DataFrame, id_col: str) -> DataFrame:
+    """``data`` with NaN read as NULL in its float/double columns — NaN is
+    pandas' missing marker, and MLlib rejects it in a feature vector. A
+    lazy projection; frames without such columns pass through."""
+    if id_col not in data.columns:
+        raise KeyError(f"id_col '{id_col}' is not in data frame")
+    floats = [c for c, t in data.dtypes if t in ("float", "double")]
+    return data.withColumns({c: F.when(~F.isnan(c), F.col(c)) for c in floats})
+
+
+def _score(preds: DataFrame, is_cat: bool) -> dict:
+    """Accuracy (categorical) or mse of ``prediction`` against ``label``."""
+    if is_cat:
+        hit = (F.col("prediction") == F.col("label")).cast("double")
+        return {"accuracy": preds.agg(F.avg(hit)).collect()[0][0]}
+    err = F.pow(F.col("prediction") - F.col("label"), 2)
+    return {"mse": preds.agg(F.avg(err)).collect()[0][0]}
 
 
 def _resolve_estimator(spec, column: str):

@@ -2,6 +2,7 @@
 (reference tests.py — constructor validation, golden feature columns, and
 the no-nulls end-to-end invariant matrix)."""
 
+import math
 import os
 
 import pytest
@@ -217,9 +218,80 @@ def test_fit_save_then_transform_and_validate(territories, tmp_path):
     ).count()
     assert nulls == 0
 
+    # fit(transform=True) and fit() + transform() share one impute path:
+    # with a deterministic tree pair they give the same rows.
+    in_one = imp.fit(
+        classification=DecisionTreeClassifier(maxDepth=4),
+        regression=DecisionTreeRegressor(maxDepth=4),
+        transform=True,
+    )["imputed_data"]
+    assert sorted(in_one.collect()) == sorted(out["imputed_data"].collect())
+
+    # Scores on the training table, pinned exactly: the tree pair is
+    # deterministic, so a change in validate's feature pass, predict or
+    # scorer shows here.
     val = imp.validate(territories)
-    assert set(val["tests"]) == {"Location", "km2", "gdp_per_capita"}
-    assert 0.0 <= val["tests"]["Location"]["model_performance"]["accuracy"] <= 1.0
+    assert {c: t["model_performance"] for c, t in val["tests"].items()} == {
+        "Location": {"accuracy": 16 / 17},
+        "km2": {"mse": 10061.408854166666},
+        "gdp_per_capita": {"mse": 508931451.85185176},
+    }
+
+
+def test_nan_counts_as_missing(spark, tmp_path):
+    """NaN and NULL are one missing marker from the constructor on."""
+    df = spark.createDataFrame(
+        [(0, 1.0), (1, float("nan")), (2, None)], "id long, a double"
+    )
+    imp = SparkImputer(df, save_models_to=str(tmp_path / "m"), id_col="id")
+    row = imp.missing_metrics().collect()[0]
+    assert (row["observed"], row["missing"]) == (1, 2)
+
+
+def test_nan_cells_are_imputed(spark, tmp_path):
+    """NaN, pandas' missing marker, in a double column is read as NULL:
+    its cells are imputed, observed cells are kept, and no NaN or NULL is
+    left (MLlib rejects a NaN feature vector outright)."""
+    from pyspark.ml.classification import DecisionTreeClassifier
+    from pyspark.ml.regression import DecisionTreeRegressor
+
+    rows = [
+        (i, float(i % 10), float("nan") if i % 7 == 3 else 2.0 * i,
+         None if i % 9 == 4 else f"c{i % 3}")
+        for i in range(40)
+    ]
+    df = spark.createDataFrame(rows, "id long, a double, b double, k string")
+    imp = SparkImputer(
+        df, categorical=["k"], save_models_to=str(tmp_path / "m"), id_col="id"
+    )
+    out = imp.fit(
+        classification=DecisionTreeClassifier(maxDepth=3),
+        regression=DecisionTreeRegressor(maxDepth=3),
+        transform=True,
+    )["imputed_data"]
+    got = {r["id"]: r for r in out.collect()}
+    assert sorted(got) == list(range(40))
+    assert all(
+        r["b"] is not None and not math.isnan(r["b"]) and r["k"] is not None
+        for r in got.values()
+    )
+    assert all(got[i]["b"] == 2.0 * i for i in range(40) if i % 7 != 3)
+
+
+@pytest.mark.parametrize("n_observed", [0, 1])
+def test_target_with_under_two_observed_cells_raises(
+    spark, tmp_path, n_observed
+):
+    """A target needs one observed cell to train on and one to score on;
+    with fewer, fit raises a ValueError naming it before any model trains."""
+    from pyspark.ml.classification import DecisionTreeClassifier
+    from pyspark.ml.regression import DecisionTreeRegressor
+
+    rows = [(i, float(i), 1.0 if i < n_observed else None) for i in range(10)]
+    df = spark.createDataFrame(rows, "id long, a double, b double")
+    imp = SparkImputer(df, save_models_to=str(tmp_path / "m"), id_col="id")
+    with pytest.raises(ValueError, match=f"column 'b' has {n_observed} observed"):
+        imp.fit(DecisionTreeClassifier(), DecisionTreeRegressor())
 
 
 def test_round_column_integrality(territories, tmp_path):

@@ -60,14 +60,14 @@ def test_same_rejects_column_count_drift():
     assert not _same([(1, 2, 3)], [(1, 2)])
 
 
-def test_changed_since_closure_taints_through_helpers():
+def test_changed_since_closure_taints_through_helpers(tmp_path):
     """VERDICT r13 #4: the delta-sweep must follow the helper closure —
     a change to the exact-rank quantile selection (functions/stats.py)
     taints the stratified sampler (operators/split.py) and through it
     every funnel/sampler query, even though none of their plan
-    functions changed directly. Probed against HEAD (empty diff -> no
-    queries) and against a synthetic taint seeded at
-    exact_rank_quantiles."""
+    functions changed directly. Probed on a clean clone of HEAD (empty
+    diff -> no queries, whatever the checkout's uncommitted edits) and
+    against a synthetic taint seeded at exact_rank_quantiles."""
     import sys
     from pathlib import Path
 
@@ -75,8 +75,16 @@ def test_changed_since_closure_taints_through_helpers():
     sys.path.insert(0, str(root / "tools"))
     import sf_oracle_sweep as S
 
-    # Empty diff: nothing tainted.
-    assert S.changed_queries(str(root), "HEAD") == set()
+    # Empty diff: nothing tainted. A fresh clone has no working-tree
+    # edits, so its diff against HEAD is empty by construction.
+    import subprocess
+
+    clone = tmp_path / "clone"
+    subprocess.run(
+        ["git", "clone", "-q", str(root), str(clone)],
+        check=True, capture_output=True, timeout=120,
+    )
+    assert S.changed_queries(str(clone), "HEAD") == set()
 
     # Seed the closure directly (monkeypatch-free: replicate the tail of
     # changed_queries over a forced seed) — the helper chain must reach
