@@ -11,11 +11,17 @@ split of the observed rows, and writes predictions into the missing cells.
 Spark-first design decisions (NOT a port):
 - Tables are lazy DataFrames with an explicit ``id`` key column — the pandas
   index (reference :38) has no distributed equivalent; all row addressing is
-  key equi-joins, and the scatter write-back (reference :272) is
-  join+coalesce (operators/update.py).
+  key equi-joins (so ids must be unique and non-NULL), and the scatter
+  write-back (reference :272) is ONE join+coalesce for all imputed columns
+  (operators/update.py).
 - Missing values are native SQL NULLs — the reference's ``-1234`` sentinel
   (reference :223) is an implementation artifact that would corrupt data and
   is deliberately NOT replicated (SURVEY.md §7.3 #4).
+- A categorical's domain is one bounded collect (``distinct_values``,
+  capped at class_threshold) from the raw frame: one per feature pass,
+  which gates the column and gives ``one_hot`` its values, and one per
+  categorical target in ``fit``. Filling only copies observed values, so
+  the one-hot (:165) and LabelEncoder (:227-228) domains are the same.
 - The feature matrix is built once per call (``fit``, ``transform`` or
   ``validate``), min-max scaled, and materialized with an eager
   ``localCheckpoint`` — every imputed column reads that one copy (the
@@ -42,6 +48,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -52,6 +59,7 @@ from scikit_learn_imputer_spark.functions.stats import (
     imputation_variance_long,
 )
 from scikit_learn_imputer_spark.operators.encode import (
+    distinct_values,
     label_decode,
     label_encode,
     one_hot,
@@ -62,14 +70,14 @@ from scikit_learn_imputer_spark.operators.missing import (
     missing_metrics,
 )
 from scikit_learn_imputer_spark.operators.scale import minmax_scale
-from scikit_learn_imputer_spark.operators.split import split_exact
+from scikit_learn_imputer_spark.operators.split import holdout_size, split_exact
 from scikit_learn_imputer_spark.operators.update import scatter_update
 
 
 class SparkImputer:
     """Impute missing values in a DataFrame with mixed types using any MLlib
-    classifier and regressor. ``id_col`` is the row key and must be numeric
-    and unique (the reference's "index used as the ID", reference :38).
+    classifier and regressor. ``id_col`` is the row key and must be numeric,
+    unique and non-NULL (the reference's "index used as the ID", :38).
 
     Parameters mirror the reference constructor (reference :67-107):
     input_data, categorical, save_models_to, round_column, class_threshold,
@@ -160,19 +168,16 @@ class SparkImputer:
         categorical = [c for c in self.categorical if c in cols]
         df = data.select(self.id_col, *cols)
 
-        filled = ffill_bfill(df, self.id_col, cols)
-
-        if categorical:
-            cards = filled.agg(
-                *[F.countDistinct(F.col(c)).alias(c) for c in categorical]
-            ).collect()[0]
-            too_many = [c for c in categorical if cards[c] > self.class_threshold]
-        else:
-            too_many = []
-        keep_cats = [c for c in categorical if c not in too_many]
-        filled = filled.drop(*too_many)
-
-        encoded = one_hot(filled, keep_cats)
+        domains = {}
+        for c in categorical:
+            try:
+                domains[c] = distinct_values(data, c, self.class_threshold)
+            except ValueError:  # over class_threshold: pruned
+                pass
+        filled = ffill_bfill(df, self.id_col, cols).drop(
+            *[c for c in categorical if c not in domains]
+        )
+        encoded = one_hot(filled, list(domains), values=domains)
 
         if self.include_missing_flags:
             flags = missing_indicator(data, keep=[self.id_col])
@@ -186,7 +191,17 @@ class SparkImputer:
         )
 
     def _features(self, data: DataFrame) -> DataFrame:
-        """``create_features(data)``, min-max scaled, materialized once."""
+        """``create_features(data)``, min-max scaled, materialized once;
+        first, one aggregate checks that the ids are unique and non-NULL."""
+        ids = F.col(self.id_col)
+        rows, n_ids, distinct = data.agg(
+            F.count("*"), F.count(ids), F.count_distinct(ids)
+        ).first()
+        if not rows == n_ids == distinct:
+            raise ValueError(
+                f"id_col '{self.id_col}' must be unique and non-NULL: {rows} "
+                f"rows, {rows - n_ids} NULL and {n_ids - distinct} duplicate ids"
+            )
         features = self.create_features(data)
         feat_cols = self._data_cols(features)
         # Eager materialization, not a lazy cache(): the per-column fits
@@ -230,7 +245,16 @@ class SparkImputer:
         """
         start_overall = time.time()
 
-        to_impute = self._columns_with_missing()
+        observed = self._columns_with_missing()
+        for column, n in observed.items():
+            # split_exact takes ⌈n·test_size⌉ test rows; both sides need one.
+            if not (0 < test_size < 1 and 0 < holdout_size(n, test_size) < n):
+                raise ValueError(
+                    f"column '{column}' has {n} observed value(s); "
+                    f"test_size={test_size} must leave at least 1 of them to "
+                    f"train on and 1 to score on"
+                )
+        to_impute = list(observed)
         features = self._features(self.input_data)
         feat_cols = self._data_cols(features)
 
@@ -279,28 +303,16 @@ class SparkImputer:
         # and any accidental substring match; SURVEY.md P8).
         model_features = [c for c in self._data_cols(features) if column not in c]
 
-        if is_cat:
-            # Bounded label collect: features are gated by class_threshold
-            # at construction, but the TARGET's label domain is collected
-            # here — cap it the same way so a high-cardinality categorical
-            # target fails fast instead of OOMing the driver. limit(T+1)
-            # bounds both the job output and driver memory; when the
-            # distinct count is within the gate, the limit is not reached
-            # and the collect is exact.
-            cap = self.class_threshold
-            distinct = (
-                self.input_data.select(column).dropna().distinct()
-                .limit(cap + 1).collect()
-            )
-            if len(distinct) > cap:
+        labels = None
+        if is_cat:  # a target over class_threshold cannot be pruned
+            try:
+                labels = distinct_values(self.input_data, column, self.class_threshold)
+            except ValueError:
                 raise ValueError(
                     f"categorical target '{column}' has more than "
-                    f"{cap} distinct values (class_threshold); raise "
-                    f"class_threshold or drop the column"
-                )
-            labels = sorted(r[0] for r in distinct)
-        else:
-            labels = None
+                    f"{self.class_threshold} distinct values (class_threshold); "
+                    f"raise class_threshold or drop the column"
+                ) from None
         observed = self._labels(self.input_data, column, labels)
 
         train_keys, test_keys = split_exact(
@@ -379,32 +391,34 @@ class SparkImputer:
         )
 
     def _impute(self, features: DataFrame, records: dict, columns) -> DataFrame:
-        """Predict the NULL cells of each column and scatter-update them
-        into the input, in column order (reference :261-272); sets each
-        record's ``impute_time``."""
+        """Predict each column on its own NULL rows (reference :261-272),
+        then scatter-update all of them with ONE join; sets each record's
+        ``impute_time``."""
         dtypes = dict(self.input_data.dtypes)
-        imputed = self.input_data
+        preds = []
         for column in columns:
             start = time.time()
             record = records[column]
-            missing_keys = self.input_data.filter(
-                F.col(column).isNull()
-            ).select(self.id_col)
-            preds = self._predict(
+            keys = self.input_data.filter(F.col(column).isNull())
+            pred = self._predict(
                 column, record["trained_model"], record["model_features"],
-                missing_keys, features,
+                keys.select(self.id_col), features,
             )
             if record["label_encoder"] is not None:
-                preds = label_decode(
-                    preds, "prediction", record["label_encoder"]
-                )
-            updates = preds.select(
-                F.col(self.id_col),
-                F.col("prediction").cast(dtypes[column]).alias(column),
-            )
-            imputed = scatter_update(imputed, updates, self.id_col, column)
+                pred = label_decode(pred, "prediction", record["label_encoder"])
+            preds.append(pred.select(
+                self.id_col, F.col("prediction").cast(dtypes[column]).alias(column)
+            ))
             record["impute_time"] = time.time() - start
-        return imputed
+        if not preds:
+            return self.input_data
+        # One row per id, holding the predictions of the columns it misses.
+        updates = reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True), preds
+        ).groupBy(self.id_col).agg(
+            *[F.first(c, ignorenulls=True).alias(c) for c in columns]
+        )
+        return scatter_update(self.input_data, updates, self.id_col, columns)
 
     def _save_models(self, trained_models: dict, columns: list[str]) -> None:
         """MLlib writers + JSON manifest replace the joblib pickle
@@ -599,18 +613,11 @@ class SparkImputer:
     def _data_cols(self, data: DataFrame) -> list[str]:
         return [c for c in data.columns if c != self.id_col]
 
-    def _columns_with_missing(self) -> list[str]:
-        """The columns to impute, in data order. Each needs two observed
-        cells, one to train on and one to score on; the counts come from
-        the same collect that lists the columns."""
+    def _columns_with_missing(self) -> dict[str, int]:
+        """The columns to impute, in data order, each with its number of
+        observed cells (``fit`` checks its split against these counts)."""
         info = self.missing_metrics().filter(F.col("missing") > 0).collect()
-        for r in info:
-            if r["observed"] < 2:
-                raise ValueError(
-                    f"column '{r['variable']}' has {r['observed']} observed "
-                    f"value(s); imputing it needs at least 2"
-                )
-        return [r["variable"] for r in info]
+        return {r["variable"]: r["observed"] for r in info}
 
 
 def _checked_input(data: DataFrame, id_col: str) -> DataFrame:

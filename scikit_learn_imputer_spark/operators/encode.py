@@ -28,12 +28,12 @@ def distinct_values(df: DataFrame, col: str, max_values: int | None = None) -> l
     """Sorted distinct non-null values of a column (exact, one agg).
 
     ``limit(max_values + 1)`` bounds both the job output and driver
-    memory (same fail-fast pattern as the imputer's label collect): a
-    column whose cardinality exceeds the cap raises instead of
+    memory: a column whose cardinality exceeds the cap raises instead of
     collecting unboundedly; within the cap the limit is never reached
-    and the collect is exact. Inside the imputer the class_threshold
-    gate keeps domains tiny; the cap protects STANDALONE
-    one_hot/label_encode calls on high-cardinality columns."""
+    and the collect is exact. The imputer passes its class_threshold as
+    the cap, so this one collect is also its cardinality gate; the
+    default cap protects STANDALONE one_hot/label_encode calls on
+    high-cardinality columns."""
     if max_values is None:
         max_values = DEFAULT_MAX_VALUES
     rows = (
@@ -55,7 +55,6 @@ def one_hot(
     df: DataFrame,
     cols: list[str],
     values: dict[str, list] | None = None,
-    drop_encoded: bool = True,
 ) -> DataFrame:
     """pandas-get_dummies-shaped one-hot: for each col in ``cols``, append
     ``<col>_<value>`` 0/1 ints in value-sorted order. NULL encodes to all
@@ -71,7 +70,7 @@ def one_hot(
     out: list[Column] = []
     seen: set[str] = set()
     for c in df.columns:
-        if c in cols and drop_encoded:
+        if c in cols:
             continue
         out.append(F.col(c))
         seen.add(c)

@@ -22,6 +22,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def holdout_size(n: int, test_size: float) -> int:
+    """Test rows of an exact split of ``n`` rows: ⌈n·test_size⌉, capped at
+    ``n`` (sklearn's count)."""
+    return min(int(n * test_size + 0.9999999), n)
+
+
 def split_exact(
     df: DataFrame,
     test_size: float,
@@ -60,7 +66,7 @@ def split_exact(
     n = sum(counts.values())
     if n == 0:
         return df, df
-    k = min(int(n * test_size + 0.9999999), n)  # ceil, matches sklearn
+    k = holdout_size(n, test_size)
 
     # Largest-remainder apportionment: floor share first, then +1 to the
     # buckets with the largest remainders (ties broken by bucket id) until

@@ -242,7 +242,7 @@ def q_scatter_update_mean(spark, sf_dir):
         .crossJoin(F.broadcast(fill))
         .select("c_custkey", F.col("fill").alias("c_acctbal"))
     )
-    return scatter_update(df, updates, "c_custkey", "c_acctbal")
+    return scatter_update(df, updates, "c_custkey", ["c_acctbal"])
 
 
 @register(

@@ -129,14 +129,19 @@ def test_minmax_scale_sklearn_semantics(spark):
 
 def test_scatter_update_only_fills_nulls(spark):
     schema = StructType(
-        [StructField("id", LongType(), False), StructField("v", DoubleType(), True)]
+        [StructField("id", LongType(), False)]
+        + [StructField(c, DoubleType(), True) for c in ("v", "w")]
     )
-    base = spark.createDataFrame([(0, 1.0), (1, None), (2, 3.0)], schema)
-    updates = spark.createDataFrame([(1, 99.0), (2, 777.0)], schema)
-    out = scatter_update(base, updates, "id", "v")
-    rows = {r["id"]: r["v"] for r in out.collect()}
-    # row 2's observed value wins over the update (coalesce order)
-    assert rows == {0: 1.0, 1: 99.0, 2: 3.0}
+    base = spark.createDataFrame(
+        [(0, 1.0, None), (1, None, 5.0), (2, 3.0, None)], schema
+    )
+    updates = spark.createDataFrame([(1, 99.0, 11.0), (2, 777.0, 12.0)], schema)
+    out = scatter_update(base, updates, "id", ["v", "w"])
+    assert out.columns == ["id", "v", "w"]
+    rows = {r["id"]: (r["v"], r["w"]) for r in out.collect()}
+    # observed values win over the updates (coalesce order), per column;
+    # row 0 has no update, so it survives unchanged with its NULL cell
+    assert rows == {0: (1.0, None), 1: (99.0, 5.0), 2: (3.0, 12.0)}
 
 
 def test_split_exact_fraction_and_determinism(spark):

@@ -95,6 +95,21 @@ def test_create_features_golden_columns(territories, tmp_path):
     assert all(v == 0 for v in n_null)
 
 
+def test_create_features_collects_each_domain_once(spark, territories, tmp_path):
+    """One bounded collect per categorical (Name, pruned, and Location)
+    decides the pruning and gives one_hot its domain, so one_hot collects
+    nothing: at most 8 jobs in all."""
+    sc = spark.sparkContext
+    imp = _imputer(territories, tmp_path)
+    sc.setJobGroup("create_features_jobs", "jobs of one create_features")
+    try:
+        imp.create_features()
+        jobs = sc.statusTracker().getJobIdsForGroup("create_features_jobs")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) <= 8
+
+
 def test_create_features_missing_flags(territories, tmp_path):
     imp = _imputer(territories, tmp_path, include_missing_flags=True)
     feats = imp.create_features()
@@ -197,6 +212,10 @@ def test_fit_transform_no_nulls_invariant(territories, tmp_path, pair_name):
     assert out.count() == 19
     for c in ["Location", "km2", "gdp_per_capita"]:
         assert "model_performance" in result[c]
+    # The k=3 imputed columns are written back with k predict joins and
+    # ONE scatter join, not a scatter join per column.
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert sum("Join " in line for line in plan.splitlines()) == 4
 
 
 def test_fit_save_then_transform_and_validate(territories, tmp_path):
@@ -292,6 +311,59 @@ def test_target_with_under_two_observed_cells_raises(
     imp = SparkImputer(df, save_models_to=str(tmp_path / "m"), id_col="id")
     with pytest.raises(ValueError, match=f"column 'b' has {n_observed} observed"):
         imp.fit(DecisionTreeClassifier(), DecisionTreeRegressor())
+
+
+@pytest.mark.parametrize("test_size", [0.0, 0.99])
+def test_test_size_leaving_an_empty_split_raises(
+    territories, tmp_path, test_size
+):
+    """0.0 leaves no test rows and 0.99 of 17 observed Location cells no
+    training rows; fit raises a ValueError naming the column before any
+    model trains."""
+    from pyspark.ml.classification import DecisionTreeClassifier
+    from pyspark.ml.regression import DecisionTreeRegressor
+
+    imp = _imputer(territories, tmp_path)
+    with pytest.raises(
+        ValueError, match=f"column 'Location' has 17 .*test_size={test_size}"
+    ):
+        imp.fit(
+            DecisionTreeClassifier(), DecisionTreeRegressor(),
+            test_size=test_size,
+        )
+
+
+@pytest.mark.parametrize("defect", ["duplicate", "null"])
+def test_duplicate_or_null_ids_raise(territories, tmp_path, defect):
+    """Every row address is an id equi-join, so a duplicated id would fan
+    the write-back out; fit raises a ValueError naming id_col instead."""
+    from pyspark.ml.classification import DecisionTreeClassifier
+    from pyspark.ml.regression import DecisionTreeRegressor
+
+    if defect == "duplicate":
+        df = territories.unionByName(territories.filter(F.col("id") < 3))
+    else:
+        df = territories.withColumn("id", F.when(F.col("id") > 0, F.col("id")))
+    imp = _imputer(df, tmp_path)
+    with pytest.raises(ValueError, match="id_col 'id' must be unique"):
+        imp.fit(DecisionTreeClassifier(), DecisionTreeRegressor())
+
+
+def test_categorical_target_over_class_threshold_raises(territories, tmp_path):
+    """A categorical over class_threshold is pruned from the features, but
+    as a target it cannot be: fit raises a ValueError naming it."""
+    from pyspark.ml.classification import DecisionTreeClassifier
+    from pyspark.ml.regression import DecisionTreeRegressor
+
+    # Name has 19 distinct values against class_threshold=14.
+    df = territories.withColumn("Name", F.when(F.col("id") > 0, F.col("Name")))
+    imp = _imputer(df, tmp_path, features=["km2"])
+    with pytest.raises(
+        ValueError, match="categorical target 'Name' has more than 14"
+    ):
+        imp.fit(
+            DecisionTreeClassifier(), DecisionTreeRegressor(), parallelism=1
+        )
 
 
 def test_round_column_integrality(territories, tmp_path):
