@@ -280,18 +280,27 @@ def guarded_candidate_frame(cands: DataFrame) -> tuple[DataFrame, bool, bool]:
     restriction decision; ``SPARK_GRAFT_CAND_BROADCAST_ROW_BOUND``
     overrides the bound. Results are join-strategy/pre-filter invariant
     either way (the restricted docs are a superset of every id the
-    inner joins keep)."""
+    inner joins keep). Both are parsed before any job: a malformed
+    value raises a ``ValueError`` naming its variable."""
     import os
 
-    bound = int(
-        os.environ.get(
-            "SPARK_GRAFT_CAND_BROADCAST_ROW_BOUND", CAND_BROADCAST_ROW_BOUND
+    raw = os.environ.get("SPARK_GRAFT_CAND_BROADCAST_ROW_BOUND")
+    try:
+        bound = CAND_BROADCAST_ROW_BOUND if raw is None else int(raw)
+    except ValueError:
+        raise ValueError(
+            f"SPARK_GRAFT_CAND_BROADCAST_ROW_BOUND must be an integer, "
+            f"got {raw!r}"
+        ) from None
+    mode = os.environ.get("SPARK_GRAFT_RESTRICT_CAND_GRAMS", "auto")
+    if mode not in ("0", "1", "auto"):
+        raise ValueError(
+            f"SPARK_GRAFT_RESTRICT_CAND_GRAMS must be 0, 1 or auto, "
+            f"got {mode!r}"
         )
-    )
     large = cands.count() > bound
     if large:
         cands = cands.hint("merge")
-    mode = os.environ.get("SPARK_GRAFT_RESTRICT_CAND_GRAMS", "auto")
     restrict = large if mode == "auto" else mode == "1"
     return cands, large, restrict
 

@@ -10,22 +10,22 @@ split of the observed rows, and writes predictions into the missing cells.
 
 Spark-first design decisions (NOT a port):
 - Tables are lazy DataFrames with an explicit ``id`` key column — the pandas
-  index (reference :38) has no distributed equivalent; all row addressing is
-  key equi-joins (so ids must be unique and non-NULL), and the scatter
-  write-back (reference :272) is ONE join+coalesce for all imputed columns
-  (operators/update.py).
+  index (reference :38) has no distributed equivalent, so ids must be unique
+  and non-NULL. The only join is the scatter write-back (reference :272):
+  ONE join+coalesce on the id for all imputed columns (operators/update.py).
 - Missing values are native SQL NULLs — the reference's ``-1234`` sentinel
   (reference :223) is an implementation artifact that would corrupt data and
   is deliberately NOT replicated (SURVEY.md §7.3 #4).
 - A categorical's domain is one bounded collect (``distinct_values``,
-  capped at class_threshold) from the raw frame: one per feature pass,
-  which gates the column and gives ``one_hot`` its values, and one per
-  categorical target in ``fit``. Filling only copies observed values, so
-  the one-hot (:165) and LabelEncoder (:227-228) domains are the same.
+  capped at class_threshold) from the raw frame per feature pass: it gates
+  the column, gives ``one_hot`` its values and is the label list ``fit``
+  encodes it with as a target. Filling only copies observed values, so the
+  one-hot (:165) and LabelEncoder (:227-228) domains are the same.
 - The feature matrix is built once per call (``fit``, ``transform`` or
   ``validate``), min-max scaled, and materialized with an eager
   ``localCheckpoint`` — every imputed column reads that one copy (the
-  reference copies it per column, :235).
+  reference copies it per column, :235). It carries each target's raw
+  column, so a target's train, test and impute rows are filters of it.
 - NaN in a float/double column (pandas' missing marker, so the reference's)
   is read as NULL wherever data enters: the constructor and ``validate``.
 - Models are MLlib Pipelines (VectorAssembler + user estimator), persisted
@@ -72,6 +72,8 @@ from scikit_learn_imputer_spark.operators.missing import (
 from scikit_learn_imputer_spark.operators.scale import minmax_scale
 from scikit_learn_imputer_spark.operators.split import holdout_size, split_exact
 from scikit_learn_imputer_spark.operators.update import scatter_update
+
+_RAW = "__raw__"  # prefix of the raw target columns the feature frame carries
 
 
 class SparkImputer:
@@ -162,37 +164,46 @@ class SparkImputer:
         """ffill/bfill → cardinality prune → one-hot → optional missing
         flags (reference :140-176) of ``data`` (default: ``input_data``).
         Returns a flat numeric frame keyed by id — flat named columns keep
-        it oracle-checkable."""
+        it oracle-checkable. Raw target columns (``_features``) pass
+        through unfilled and uncast."""
         data = self.input_data if data is None else data
-        cols = [c for c in self.features or data.columns if c != self.id_col]
+        raw = [c for c in data.columns if c.startswith(_RAW)]
+        cols = [c for c in self.features or self._data_cols(data) if c != self.id_col]
         categorical = [c for c in self.categorical if c in cols]
-        df = data.select(self.id_col, *cols)
+        keep = [self.id_col, *cols, *raw]
+        df = data.select(*keep)
+        if self.include_missing_flags:  # taken before the fill, never filled
+            df = missing_indicator(data, self._data_cols(data), keep=keep)
+        flags = df.columns[len(keep):]
 
-        domains = {}
-        for c in categorical:
-            try:
-                domains[c] = distinct_values(data, c, self.class_threshold)
-            except ValueError:  # over class_threshold: pruned
-                pass
+        # One bounded collect per categorical feature or carried target,
+        # None when over class_threshold; fit reads its label lists here.
+        self._domains = {}
+        for c in self.categorical:
+            if c in cols or _RAW + c in raw:
+                try:
+                    self._domains[c] = distinct_values(data, c, self.class_threshold)
+                except ValueError:
+                    self._domains[c] = None
+        kept = {c: self._domains[c] for c in categorical if self._domains[c]}
         filled = ffill_bfill(df, self.id_col, cols).drop(
-            *[c for c in categorical if c not in domains]
+            *[c for c in categorical if c not in kept]
         )
-        encoded = one_hot(filled, list(domains), values=domains)
-
-        if self.include_missing_flags:
-            flags = missing_indicator(data, keep=[self.id_col])
-            encoded = encoded.join(flags, on=self.id_col, how="inner")
+        encoded = one_hot(filled, list(kept), values=kept)
 
         # Cast everything (flags included) to double so the assembled vector
         # is homogeneous and the scaler is a plain projection.
+        feats = [c for c in self._data_cols(encoded) if c not in flags] + flags
         return encoded.select(
             F.col(self.id_col),
-            *[F.col(c).cast("double").alias(c) for c in self._data_cols(encoded)],
+            *[F.col(c).cast("double").alias(c) for c in feats],
+            *raw,
         )
 
-    def _features(self, data: DataFrame) -> DataFrame:
-        """``create_features(data)``, min-max scaled, materialized once;
-        first, one aggregate checks that the ids are unique and non-NULL."""
+    def _features(self, data: DataFrame, targets: list[str]) -> DataFrame:
+        """``create_features(data)`` carrying each target's raw column
+        (``__raw__<col>``), min-max scaled, materialized once; first, one
+        aggregate checks that the ids are unique and non-NULL."""
         ids = F.col(self.id_col)
         rows, n_ids, distinct = data.agg(
             F.count("*"), F.count(ids), F.count_distinct(ids)
@@ -202,7 +213,9 @@ class SparkImputer:
                 f"id_col '{self.id_col}' must be unique and non-NULL: {rows} "
                 f"rows, {rows - n_ids} NULL and {n_ids - distinct} duplicate ids"
             )
-        features = self.create_features(data)
+        features = self.create_features(
+            data.withColumns({_RAW + c: F.col(c) for c in targets})
+        )
         feat_cols = self._data_cols(features)
         # Eager materialization, not a lazy cache(): the per-column fits
         # run CONCURRENTLY from fit's thread pool, and a lazy cache
@@ -246,7 +259,7 @@ class SparkImputer:
         start_overall = time.time()
 
         observed = self._columns_with_missing()
-        for column, n in observed.items():
+        for column, (n, _) in observed.items():
             # split_exact takes ⌈n·test_size⌉ test rows; both sides need one.
             if not (0 < test_size < 1 and 0 < holdout_size(n, test_size) < n):
                 raise ValueError(
@@ -255,16 +268,20 @@ class SparkImputer:
                     f"train on and 1 to score on"
                 )
         to_impute = list(observed)
-        features = self._features(self.input_data)
+        features = self._features(self.input_data, to_impute)
         feat_cols = self._data_cols(features)
+        domains = self._domains
 
         def train(column: str) -> dict:
             start_time = time.time()
             record = self._fit_one(
-                column, features, classification, regression, test_size,
-                random_seed,
+                column, features, domains, classification, regression,
+                test_size, random_seed,
             )
             record["train_time"] = time.time() - start_time
+            n, missing = observed[column]
+            k = holdout_size(n, test_size)
+            record.update(n_train=n - k, n_test=k, n_imputed=missing)
             return record
 
         if parallelism > 1 and len(to_impute) > 1:
@@ -290,10 +307,11 @@ class SparkImputer:
         return trained_models
 
     def _fit_one(
-        self, column, features, classification, regression, test_size,
-        random_seed,
+        self, column, features, domains, classification, regression,
+        test_size, random_seed,
     ) -> dict:
-        """Train + hold-out-score the model for one target column."""
+        """Train + hold-out-score the model for one target column; a
+        categorical target's labels are its feature-pass domain."""
         from pyspark.ml import Pipeline
         from pyspark.ml.feature import VectorAssembler
 
@@ -302,28 +320,28 @@ class SparkImputer:
         # (reference :236 — drops the target, its one-hot/flag derivatives,
         # and any accidental substring match; SURVEY.md P8).
         model_features = [c for c in self._data_cols(features) if column not in c]
+        if not model_features:
+            raise ValueError(
+                f"column '{column}' has no feature column left to predict it from"
+            )
 
-        labels = None
-        if is_cat:  # a target over class_threshold cannot be pruned
-            try:
-                labels = distinct_values(self.input_data, column, self.class_threshold)
-            except ValueError:
-                raise ValueError(
-                    f"categorical target '{column}' has more than "
-                    f"{self.class_threshold} distinct values (class_threshold); "
-                    f"raise class_threshold or drop the column"
-                ) from None
-        observed = self._labels(self.input_data, column, labels)
-
-        train_keys, test_keys = split_exact(
-            observed, test_size, random_seed, self.id_col
+        labels = domains.get(column)
+        if is_cat and labels is None:  # over class_threshold: not prunable
+            raise ValueError(
+                f"categorical target '{column}' has more than "
+                f"{self.class_threshold} distinct values (class_threshold); "
+                f"raise class_threshold or drop the column"
+            )
+        train, test = split_exact(
+            self._labels(features, column, labels), test_size, random_seed,
+            self.id_col,
         )
         assembler = VectorAssembler(
             inputCols=model_features, outputCol="__vec", handleInvalid="keep"
         )
         spec = classification if is_cat else regression
         est = _resolve_estimator(spec, column).copy()
-        est = est.setFeaturesCol("__vec").setLabelCol("label")
+        est = est.setFeaturesCol("__vec").setLabelCol("__label")
         if est.hasParam("seed"):
             est = est.setSeed(random_seed)
         # MLP usability: layers depend on the per-column feature count and
@@ -338,14 +356,12 @@ class SparkImputer:
                 [len(model_features), max(4, 2 * len(labels)), len(labels)]
             )
 
-        train = train_keys.join(features, on=self.id_col, how="inner")
         pipeline_model = Pipeline(stages=[assembler, est]).fit(train)
 
         start_test = time.time()
-        preds = self._predict(
-            column, pipeline_model, model_features, test_keys, features
+        model_performance = _score(
+            self._predict(column, pipeline_model, test), is_cat
         )
-        model_performance = _score(preds, is_cat)
         test_time = time.time() - start_test
 
         return {
@@ -356,39 +372,25 @@ class SparkImputer:
             "model_performance": model_performance,
         }
 
-    def _labels(self, data: DataFrame, column: str, labels) -> DataFrame:
-        """(id, label) for the observed cells of ``column``: the code in
-        ``labels`` for a categorical target, else the value as a double."""
-        observed = data.select(
-            F.col(self.id_col), F.col(column).alias("__target")
-        ).filter(F.col("__target").isNotNull())
+    def _labels(self, features: DataFrame, column: str, labels) -> DataFrame:
+        """The rows of ``features`` where ``column`` is observed, with its
+        ``__label``: the code in ``labels`` for a categorical target, else the
+        value as a double."""
+        raw = _RAW + column
+        rows = features.filter(F.col(raw).isNotNull())
         if labels is None:
-            return observed.select(
-                self.id_col, F.col("__target").cast("double").alias("label")
-            )
-        encoded, _ = label_encode(
-            observed, "__target", labels=labels, out_col="label"
-        )
-        return encoded.select(self.id_col, "label")
+            return rows.withColumn("__label", F.col(raw).cast("double"))
+        return label_encode(rows, raw, labels=labels, out_col="__label")[0]
 
-    def _predict(
-        self, column, model, model_features, keys: DataFrame,
-        features: DataFrame,
-    ) -> DataFrame:
-        """``keys`` plus the model's ``prediction`` for each key, rounded
-        half-to-even (np.round, reference :251) for round columns. The
-        features are re-projected to exactly the model's saved feature list
-        (reference :339-340, SURVEY.md P10)."""
-        rows = keys.join(
-            features.select(self.id_col, *model_features),
-            on=self.id_col, how="inner",
-        )
+    def _predict(self, column, model, rows: DataFrame) -> DataFrame:
+        """``rows`` with the model's ``prediction``, rounded half-to-even
+        (np.round, reference :251) for round columns. The model's assembler
+        reads exactly its saved feature list (reference :339-340, SURVEY.md
+        P10)."""
         pred = F.col("prediction")
         if column in self.round_column:
             pred = F.bround(pred)
-        return model.transform(rows).select(
-            *keys.columns, pred.alias("prediction")
-        )
+        return model.transform(rows).withColumn("prediction", pred)
 
     def _impute(self, features: DataFrame, records: dict, columns) -> DataFrame:
         """Predict each column on its own NULL rows (reference :261-272),
@@ -399,10 +401,9 @@ class SparkImputer:
         for column in columns:
             start = time.time()
             record = records[column]
-            keys = self.input_data.filter(F.col(column).isNull())
             pred = self._predict(
-                column, record["trained_model"], record["model_features"],
-                keys.select(self.id_col), features,
+                column, record["trained_model"],
+                features.filter(F.col(_RAW + column).isNull()),
             )
             if record["label_encoder"] is not None:
                 pred = label_decode(pred, "prediction", record["label_encoder"])
@@ -438,6 +439,7 @@ class SparkImputer:
                 "model_performance": record["model_performance"],
                 "train_time": record.get("train_time"),
                 "test_time": record.get("test_time"),
+                **{k: record.get(k) for k in ("n_train", "n_test", "n_imputed")},
                 "model_dir": model_dir,
             }
         with open(os.path.join(self.save_models_to, "manifest.json"), "w") as f:
@@ -465,7 +467,7 @@ class SparkImputer:
         reused), which here is simply scaling against current min/max."""
         start_overall = time.time()
         records = self._load_models(self.input_data)
-        features = self._features(self.input_data)
+        features = self._features(self.input_data, list(records))
         imputed = self._impute(features, records, list(records))
         return {
             "imputed_data": imputed,
@@ -510,17 +512,14 @@ class SparkImputer:
         start_overall = time.time()
         validation_set = _checked_input(validation_set, self.id_col)
         records = self._load_models(validation_set)
-        features = self._features(validation_set)
+        features = self._features(validation_set, list(records))
 
         output = {}
         for column, record in records.items():
             start = time.time()
-            labels = self._labels(
-                validation_set, column, record["label_encoder"]
-            )
             preds = self._predict(
-                column, record["trained_model"], record["model_features"],
-                labels, features,
+                column, record["trained_model"],
+                self._labels(features, column, record["label_encoder"]),
             )
             output[column] = {
                 "model_performance": _score(preds, column in self.categorical),
@@ -611,13 +610,15 @@ class SparkImputer:
 
     # ------------------------------------------------------------------ util
     def _data_cols(self, data: DataFrame) -> list[str]:
-        return [c for c in data.columns if c != self.id_col]
+        return [
+            c for c in data.columns if c != self.id_col and not c.startswith(_RAW)
+        ]
 
-    def _columns_with_missing(self) -> dict[str, int]:
-        """The columns to impute, in data order, each with its number of
-        observed cells (``fit`` checks its split against these counts)."""
+    def _columns_with_missing(self) -> dict[str, tuple[int, int]]:
+        """The columns to impute, in data order, each with its numbers of
+        observed and missing cells (``fit`` sizes its split from these)."""
         info = self.missing_metrics().filter(F.col("missing") > 0).collect()
-        return {r["variable"]: r["observed"] for r in info}
+        return {r["variable"]: (r["observed"], r["missing"]) for r in info}
 
 
 def _checked_input(data: DataFrame, id_col: str) -> DataFrame:
@@ -631,11 +632,11 @@ def _checked_input(data: DataFrame, id_col: str) -> DataFrame:
 
 
 def _score(preds: DataFrame, is_cat: bool) -> dict:
-    """Accuracy (categorical) or mse of ``prediction`` against ``label``."""
+    """Accuracy (categorical) or mse of ``prediction`` against ``__label``."""
     if is_cat:
-        hit = (F.col("prediction") == F.col("label")).cast("double")
+        hit = (F.col("prediction") == F.col("__label")).cast("double")
         return {"accuracy": preds.agg(F.avg(hit)).collect()[0][0]}
-    err = F.pow(F.col("prediction") - F.col("label"), 2)
+    err = F.pow(F.col("prediction") - F.col("__label"), 2)
     return {"mse": preds.agg(F.avg(err)).collect()[0][0]}
 
 
@@ -712,8 +713,6 @@ def find_imputation_variance(
     long-form, then one groupBy — the reference's side-by-side concat (J4)
     is unnecessary.
     """
-    from functools import reduce
-
     parts = []
     for name, df in dictionary_of_data_frames.items():
         cols = [c for c in df.columns if c != id_col]

@@ -4,8 +4,11 @@ the no-nulls end-to-end invariant matrix)."""
 
 import math
 import os
+import struct
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from scikit_learn_imputer_spark import SparkImputer, find_imputation_variance
@@ -111,9 +114,22 @@ def test_create_features_collects_each_domain_once(spark, territories, tmp_path)
 
 
 def test_create_features_missing_flags(territories, tmp_path):
+    """The flags are missing_indicator's, taken in the feature projection:
+    the same columns in the same order and values, with no join added."""
     imp = _imputer(territories, tmp_path, include_missing_flags=True)
     feats = imp.create_features()
-    assert "km2_flag" in feats.columns and "Location_flag" in feats.columns
+    indicator = imp.missing_indicator()
+    flags = indicator.columns[1:]
+    assert feats.columns[-len(flags):] == flags
+    want = {r["id"]: [float(r[f]) for f in flags] for r in indicator.collect()}
+    assert {r["id"]: [r[f] for f in flags] for r in feats.collect()} == want
+
+    def joins(df):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return sum("Join " in line for line in plan.splitlines())
+
+    unflagged = _imputer(territories, tmp_path).create_features()
+    assert joins(feats) == joins(unflagged)
 
 
 def test_create_features_subset(territories, tmp_path):
@@ -212,10 +228,10 @@ def test_fit_transform_no_nulls_invariant(territories, tmp_path, pair_name):
     assert out.count() == 19
     for c in ["Location", "km2", "gdp_per_capita"]:
         assert "model_performance" in result[c]
-    # The k=3 imputed columns are written back with k predict joins and
-    # ONE scatter join, not a scatter join per column.
+    # Each of the k=3 imputed columns is predicted on a filter of the one
+    # feature frame, and all of them are written back by ONE scatter join.
     plan = out._jdf.queryExecution().optimizedPlan().toString()
-    assert sum("Join " in line for line in plan.splitlines()) == 4
+    assert sum("Join " in line for line in plan.splitlines()) == 1
 
 
 def test_fit_save_then_transform_and_validate(territories, tmp_path):
@@ -335,8 +351,8 @@ def test_test_size_leaving_an_empty_split_raises(
 
 @pytest.mark.parametrize("defect", ["duplicate", "null"])
 def test_duplicate_or_null_ids_raise(territories, tmp_path, defect):
-    """Every row address is an id equi-join, so a duplicated id would fan
-    the write-back out; fit raises a ValueError naming id_col instead."""
+    """The write-back is an id equi-join, so a duplicated id would fan it
+    out; fit raises a ValueError naming id_col instead."""
     from pyspark.ml.classification import DecisionTreeClassifier
     from pyspark.ml.regression import DecisionTreeRegressor
 
@@ -346,6 +362,80 @@ def test_duplicate_or_null_ids_raise(territories, tmp_path, defect):
         df = territories.withColumn("id", F.when(F.col("id") > 0, F.col("id")))
     imp = _imputer(df, tmp_path)
     with pytest.raises(ValueError, match="id_col 'id' must be unique"):
+        imp.fit(DecisionTreeClassifier(), DecisionTreeRegressor())
+
+
+def test_fit_collects_each_domain_once_and_records_row_counts(
+    territories, tmp_path, monkeypatch
+):
+    """One territories fit collects each categorical's domain once: the
+    feature pass's Location domain is also its label list. Each fit record
+    and the manifest hold the target's train, test and imputed row counts
+    (17 observed Location cells → ⌈1.7⌉ = 2 test rows)."""
+    import json
+
+    from pyspark.ml.classification import DecisionTreeClassifier
+    from pyspark.ml.regression import DecisionTreeRegressor
+
+    from scikit_learn_imputer_spark import imputer
+
+    calls = []
+    collect = imputer.distinct_values
+
+    def counted(df, col, *args):
+        calls.append(col)
+        return collect(df, col, *args)
+
+    monkeypatch.setattr(imputer, "distinct_values", counted)
+    imp = _imputer(territories, tmp_path)
+    fitted = imp.fit(DecisionTreeClassifier(maxDepth=4), DecisionTreeRegressor(maxDepth=4))
+    assert sorted(calls) == ["Location", "Name"]
+
+    want = {
+        "Location": (15, 2, 2),
+        "km2": (14, 2, 3),
+        "gdp_per_capita": (8, 1, 10),
+    }
+    keys = ("n_train", "n_test", "n_imputed")
+    with open(tmp_path / "models" / "manifest.json") as f:
+        manifest = json.load(f)
+    for column, sizes in want.items():
+        assert tuple(fitted[column][k] for k in keys) == sizes
+        assert tuple(manifest[column][k] for k in keys) == sizes
+
+
+def test_data_column_named_label_stays_a_feature(spark, tmp_path):
+    """A data column named ``label`` is a feature, not overwritten by the
+    target's training label: the tree splits on its parity, so ids 0 and 5
+    (label 0 and 1) get different imputations. Trained on the target
+    instead, both would fall below its smallest split and match."""
+    from pyspark.ml.classification import DecisionTreeClassifier
+    from pyspark.ml.regression import DecisionTreeRegressor
+
+    rows = [(i, float(i % 2), None if i % 5 == 0 else float(i)) for i in range(30)]
+    df = spark.createDataFrame(rows, "id long, label double, y double")
+    imp = SparkImputer(df, save_models_to=str(tmp_path / "m"), id_col="id")
+    out = imp.fit(
+        DecisionTreeClassifier(), DecisionTreeRegressor(maxDepth=2),
+        transform=True,
+    )["imputed_data"]
+    y = {r["id"]: r["y"] for r in out.collect()}
+    assert y[0] != y[5]
+
+
+def test_target_with_no_feature_left_raises(spark, tmp_path):
+    """When every other column is a pruned categorical, a target has no
+    feature to train on; fit raises a ValueError naming it."""
+    from pyspark.ml.classification import DecisionTreeClassifier
+    from pyspark.ml.regression import DecisionTreeRegressor
+
+    rows = [(i, "abcd"[i % 4], None if i % 3 == 0 else float(i)) for i in range(12)]
+    df = spark.createDataFrame(rows, "id long, k string, y double")
+    imp = SparkImputer(
+        df, categorical=["k"], class_threshold=3,
+        save_models_to=str(tmp_path / "m"), id_col="id",
+    )
+    with pytest.raises(ValueError, match="column 'y' has no feature column"):
         imp.fit(DecisionTreeClassifier(), DecisionTreeRegressor())
 
 
@@ -364,6 +454,96 @@ def test_categorical_target_over_class_threshold_raises(territories, tmp_path):
         imp.fit(
             DecisionTreeClassifier(), DecisionTreeRegressor(), parallelism=1
         )
+
+
+@st.composite
+def _mixed_tables(draw):
+    """(n, categorical, continuous, rows): 1-3 string categoricals over 2-4
+    values (class_threshold 3 prunes the 4-value ones) and 1-3 double
+    columns; about a quarter of the cells are missing, as NULL or, in a
+    double column, NaN."""
+    n = draw(st.integers(6, 16))
+    categorical = [f"cat{i}" for i in range(draw(st.integers(1, 3)))]
+    continuous = [f"num{i}" for i in range(draw(st.integers(1, 3)))]
+
+    def column(value, missing):
+        cell = st.one_of(missing, value, value, value)
+        return draw(st.lists(cell, min_size=n, max_size=n))
+
+    cells = {
+        c: column(st.sampled_from("abcd"[: draw(st.integers(2, 4))]), st.none())
+        for c in categorical
+    }
+    cells.update({
+        c: column(
+            st.floats(-100, 100).map(lambda x: round(x, 2)),
+            st.sampled_from([None, float("nan")]),
+        )
+        for c in continuous
+    })
+    rows = [(i, *[cells[c][i] for c in cells]) for i in range(n)]
+    return n, categorical, continuous, rows
+
+
+def _is_missing(v):
+    return v is None or (isinstance(v, float) and math.isnan(v))
+
+
+def _bits(v):
+    """A cell as a comparable key that tells -0.0 from 0.0."""
+    return struct.pack(">d", v) if isinstance(v, float) else v
+
+
+@given(table=_mixed_tables(), seed=st.integers(0, 2**31 - 1))
+@settings(
+    # Each example fits twice (the seed check); three keep the test under
+    # a minute on a 4-core box. derandomize fixes the examples run.
+    max_examples=3,
+    derandomize=True,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_fit_transform_property_on_mixed_tables(spark, tmp_path, table, seed):
+    """On generated mixed tables, fit(transform=True) with a deterministic
+    tree pair either raises a ValueError/KeyError naming a column, or
+    keeps every id and observed cell, leaves no missing cell in an imputed
+    column, and returns the same rows for the same seed."""
+    from pyspark.ml.classification import DecisionTreeClassifier
+    from pyspark.ml.regression import DecisionTreeRegressor
+
+    n, categorical, continuous, rows = table
+    columns = categorical + continuous
+    schema = "id long, " + ", ".join(
+        f"{c} {'string' if c in categorical else 'double'}" for c in columns
+    )
+    df = spark.createDataFrame(rows, schema)
+    imp = SparkImputer(
+        df, categorical=categorical, save_models_to=str(tmp_path / "m"),
+        class_threshold=3, id_col="id",
+    )
+
+    def imputed():
+        out = imp.fit(
+            DecisionTreeClassifier(maxDepth=3), DecisionTreeRegressor(maxDepth=3),
+            transform=True, random_seed=seed,
+        )["imputed_data"]
+        return sorted(out.collect(), key=lambda r: r["id"])
+
+    try:
+        got = imputed()
+    except (ValueError, KeyError) as e:
+        assert any(f"'{c}'" in str(e) for c in columns), str(e)
+        return
+    assert [r["id"] for r in got] == list(range(n))
+    for row, out in zip(rows, got):
+        for c, v in zip(columns, row[1:]):
+            if _is_missing(v):
+                assert not _is_missing(out[c])
+            else:
+                assert _bits(out[c]) == _bits(v)
+    assert [list(map(_bits, r)) for r in imputed()] == [
+        list(map(_bits, r)) for r in got
+    ]
 
 
 def test_round_column_integrality(territories, tmp_path):
