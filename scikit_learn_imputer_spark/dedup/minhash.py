@@ -252,12 +252,14 @@ CAND_BROADCAST_ROW_BOUND = 250_000
 
 
 def guarded_candidate_frame(cands: DataFrame) -> tuple[DataFrame, bool, bool]:
-    """Guard a MATERIALIZED (localCheckpoint'ed) candidate-pair frame
-    before it feeds joins; returns ``(cands, large, restrict)``.
+    """Materialize a candidate-pair frame and guard it before it feeds
+    joins; returns ``(cands, large, restrict)``.
 
-    Counts the already-checkpointed frame (one cheap scan of local
-    blocks, no recompute — a bounded O(1)-driver-data action, the
-    documented library-collect contract) and, above the row bound:
+    Checkpoints ``cands`` (``localCheckpoint(eager=True)``: the frame is
+    referenced more than once downstream, so its LSH join must run
+    once), counts the checkpoint (one cheap scan of local blocks, no
+    recompute — a bounded O(1)-driver-data action, the documented
+    library-collect contract) and, above the row bound:
 
     - attaches a ``merge`` hint so downstream joins route through
       sort-merge instead of collecting a corpus-growing frame into a
@@ -298,6 +300,7 @@ def guarded_candidate_frame(cands: DataFrame) -> tuple[DataFrame, bool, bool]:
             f"SPARK_GRAFT_RESTRICT_CAND_GRAMS must be 0, 1 or auto, "
             f"got {mode!r}"
         )
+    cands = cands.localCheckpoint(eager=True)
     large = cands.count() > bound
     if large:
         cands = cands.hint("merge")

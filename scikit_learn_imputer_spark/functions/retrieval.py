@@ -263,6 +263,8 @@ def _write_index_frames(
     partition overwrite for incremental appends."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     def write_postings() -> None:
         w = postings.withColumn("ingest_batch", F.lit(key)).write.mode(
             "overwrite"
@@ -284,8 +286,10 @@ def _write_index_frames(
             f"{path}/doclens/{sub}"
         ),
     ]
+    # The pool threads keep the caller's job group and scheduler pool.
+    inherit = inheritable_thread_target(postings.sparkSession)
     with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
-        for f in [pool.submit(j) for j in jobs]:
+        for f in [pool.submit(inherit(j)) for j in jobs]:
             f.result()
 
 

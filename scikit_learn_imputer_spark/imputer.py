@@ -74,6 +74,9 @@ from scikit_learn_imputer_spark.operators.split import holdout_size, split_exact
 from scikit_learn_imputer_spark.operators.update import scatter_update
 
 _RAW = "__raw__"  # prefix of the raw target columns the feature frame carries
+# The model's output columns. User columns may not start with "__" (see
+# _checked_input), so no data column can collide with these.
+_PRED, _RAW_PRED, _PROB = "__prediction", "__rawPrediction", "__probability"
 
 
 class SparkImputer:
@@ -287,10 +290,16 @@ class SparkImputer:
         if parallelism > 1 and len(to_impute) > 1:
             from concurrent.futures import ThreadPoolExecutor
 
+            from pyspark import inheritable_thread_target
+
+            # The pool threads carry the caller's local properties (job
+            # group, description, scheduler pool), so cancelling the
+            # caller's group cancels the fits too.
+            target = inheritable_thread_target(features.sparkSession)(train)
             with ThreadPoolExecutor(
                 max_workers=min(parallelism, len(to_impute))
             ) as pool:
-                futures = {c: pool.submit(train, c) for c in to_impute}
+                futures = {c: pool.submit(target, c) for c in to_impute}
                 trained_models = {c: f.result() for c, f in futures.items()}
         else:
             trained_models = {c: train(c) for c in to_impute}
@@ -341,7 +350,7 @@ class SparkImputer:
         )
         spec = classification if is_cat else regression
         est = _resolve_estimator(spec, column).copy()
-        est = est.setFeaturesCol("__vec").setLabelCol("__label")
+        est = _reserve_outputs(est.setFeaturesCol("__vec").setLabelCol("__label"))
         if est.hasParam("seed"):
             est = est.setSeed(random_seed)
         # MLP usability: layers depend on the per-column feature count and
@@ -383,14 +392,14 @@ class SparkImputer:
         return label_encode(rows, raw, labels=labels, out_col="__label")[0]
 
     def _predict(self, column, model, rows: DataFrame) -> DataFrame:
-        """``rows`` with the model's ``prediction``, rounded half-to-even
-        (np.round, reference :251) for round columns. The model's assembler
-        reads exactly its saved feature list (reference :339-340, SURVEY.md
-        P10)."""
-        pred = F.col("prediction")
+        """``rows`` with the model's prediction (``__prediction``), rounded
+        half-to-even (np.round, reference :251) for round columns. The
+        model's assembler reads exactly its saved feature list (reference
+        :339-340, SURVEY.md P10)."""
+        pred = F.col(_PRED)
         if column in self.round_column:
             pred = F.bround(pred)
-        return model.transform(rows).withColumn("prediction", pred)
+        return model.transform(rows).withColumn(_PRED, pred)
 
     def _impute(self, features: DataFrame, records: dict, columns) -> DataFrame:
         """Predict each column on its own NULL rows (reference :261-272),
@@ -406,9 +415,9 @@ class SparkImputer:
                 features.filter(F.col(_RAW + column).isNull()),
             )
             if record["label_encoder"] is not None:
-                pred = label_decode(pred, "prediction", record["label_encoder"])
+                pred = label_decode(pred, _PRED, record["label_encoder"])
             preds.append(pred.select(
-                self.id_col, F.col("prediction").cast(dtypes[column]).alias(column)
+                self.id_col, F.col(_PRED).cast(dtypes[column]).alias(column)
             ))
             record["impute_time"] = time.time() - start
         if not preds:
@@ -624,20 +633,44 @@ class SparkImputer:
 def _checked_input(data: DataFrame, id_col: str) -> DataFrame:
     """``data`` with NaN read as NULL in its float/double columns — NaN is
     pandas' missing marker, and MLlib rejects it in a feature vector. A
-    lazy projection; frames without such columns pass through."""
+    lazy projection; frames without such columns pass through. Names
+    starting with ``__`` are reserved for the imputer's own columns."""
     if id_col not in data.columns:
         raise KeyError(f"id_col '{id_col}' is not in data frame")
+    reserved = [c for c in data.columns if c.startswith("__")]
+    if reserved:
+        raise ValueError(
+            f"column names starting with '__' are reserved for the imputer: "
+            f"{reserved}"
+        )
     floats = [c for c, t in data.dtypes if t in ("float", "double")]
     return data.withColumns({c: F.when(~F.isnan(c), F.col(c)) for c in floats})
 
 
 def _score(preds: DataFrame, is_cat: bool) -> dict:
-    """Accuracy (categorical) or mse of ``prediction`` against ``__label``."""
+    """Accuracy (categorical) or mse of ``__prediction`` against ``__label``."""
     if is_cat:
-        hit = (F.col("prediction") == F.col("__label")).cast("double")
+        hit = (F.col(_PRED) == F.col("__label")).cast("double")
         return {"accuracy": preds.agg(F.avg(hit)).collect()[0][0]}
-    err = F.pow(F.col("prediction") - F.col("__label"), 2)
+    err = F.pow(F.col(_PRED) - F.col("__label"), 2)
     return {"mse": preds.agg(F.avg(err)).collect()[0][0]}
+
+
+def _reserve_outputs(est):
+    """``est`` writing its model's outputs to the reserved ``__`` columns,
+    so no data column can collide with them. A OneVsRest's classifier is
+    pointed there too: OneVsRest reads its sub-models' raw column under its
+    own ``rawPredictionCol``."""
+    for param, name in (
+        ("predictionCol", _PRED),
+        ("rawPredictionCol", _RAW_PRED),
+        ("probabilityCol", _PROB),
+    ):
+        if est.hasParam(param):
+            est.set(est.getParam(param), name)
+    if est.hasParam("classifier") and est.isDefined("classifier"):
+        _reserve_outputs(est.getOrDefault("classifier"))
+    return est
 
 
 def _resolve_estimator(spec, column: str):

@@ -8868,8 +8868,12 @@ def q_dedup_store_stats(spark, sf_dir):
 
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
+    # The pool threads keep the caller's job group and scheduler pool.
+    inherit = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        for f in [pool.submit(fp_chain), pool.submit(sig_chain)]:
+        for f in [pool.submit(inherit(fp_chain)), pool.submit(inherit(sig_chain))]:
             f.result()
     stats = dedup_store_stats(
         spark, fingerprint_path=fpath, signature_path=spath, docs=docs
@@ -10015,10 +10019,10 @@ def q_minhash_precision_audit(spark, sf_dir):
         shingle=5,
         hasher="md5",
         max_bucket=2**31,
-    ).select("id_a", "id_b").localCheckpoint(eager=True)
+    ).select("id_a", "id_b")
     # The candidate set is referenced twice (gram-intersection build +
     # the jaccard assembly); lazily the banded LSH join would run twice.
-    # It is pair-bounded, so it is materialized (guide §1.2) — measured
+    # It is pair-bounded, so the guard materializes it (guide §1.2) — measured
     # equal-min with a far tighter spread at sf0.1, and at scale it
     # halves the LSH join. Above the row bound the guard forbids
     # broadcasting it and restricts the gram explode to candidate docs
@@ -11971,6 +11975,8 @@ def q_vocab_drift(spark, sf_dir):
     hash-checked."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     from scikit_learn_imputer_spark.functions.bpe import learn_bpe_merges
 
     d = _t(spark, sf_dir, "documents")
@@ -11979,12 +11985,12 @@ def q_vocab_drift(spark, sf_dir):
     # vocabulary-sized iterations leave most executors idle; submitting
     # both from a thread pool overlaps the 2x8 iteration jobs
     # (guide §2.6 back-fill) without touching either learn's sequential
-    # semantics — each table is bit-identical to its sequential run.
+    # semantics — each table is bit-identical to its sequential run. The
+    # pool threads keep the caller's job group and scheduler pool.
+    learn = inheritable_thread_target(spark)(learn_bpe_merges)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        fa = pool.submit(
-            learn_bpe_merges, d.filter(F.col("doc_id") % 2 == 0), num_merges=k
-        )
-        fb = pool.submit(learn_bpe_merges, d, num_merges=k)
+        fa = pool.submit(learn, d.filter(F.col("doc_id") % 2 == 0), num_merges=k)
+        fb = pool.submit(learn, d, num_merges=k)
         ma, mb = fa.result(), fb.result()
     flags = (
         ma.select("merged", F.lit(1).alias("a"), F.lit(0).alias("b"))
@@ -12663,9 +12669,9 @@ def q_minhash_calibration(spark, sf_dir):
         F.round(F.col("est_jaccard") * _MINHASH_K)
         .cast("bigint")
         .alias("n_hash_agree"),
-    ).localCheckpoint(eager=True)
-    # Same shape as minhash_precision_audit: the pair-bounded candidate
-    # set is materialized because the LSH join feeding it must run once
+    )
+    # Same shape as minhash_precision_audit: the guard materializes the
+    # pair-bounded candidate set because the LSH join feeding it must run once
     # (guide §1.2); the scale guard forbids broadcasting it and
     # restricts the gram-set projection above the row bound (VERDICT
     # r14 #2/#3), and the intersections are row-local array_intersects

@@ -23,6 +23,56 @@ def territories(spark):
     return territories_df(spark)
 
 
+@pytest.fixture(scope="module")
+def dt4_imputed(spark, tmp_path_factory):
+    """One DecisionTree(maxDepth=4) ``fit(transform=True)`` on territories,
+    shared by the tests that read its imputed frame."""
+    from pyspark.ml.classification import DecisionTreeClassifier
+    from pyspark.ml.regression import DecisionTreeRegressor
+
+    imp = _imputer(territories_df(spark), tmp_path_factory.mktemp("dt4"))
+    return imp.fit(
+        classification=DecisionTreeClassifier(maxDepth=4),
+        regression=DecisionTreeRegressor(maxDepth=4),
+        transform=True,
+    )["imputed_data"]
+
+
+@pytest.fixture(scope="module")
+def select_model_run(spark, tmp_path_factory):
+    """One ``select_model`` on territories over a DecisionTree(maxDepth=3)
+    pair, timed separately, and a RandomForest(numTrees=5) pair, with its
+    CSV report; returns ``(summary, csv_path)``."""
+    from pyspark.ml.classification import (
+        DecisionTreeClassifier,
+        RandomForestClassifier,
+    )
+    from pyspark.ml.regression import (
+        DecisionTreeRegressor,
+        RandomForestRegressor,
+    )
+
+    tmp_path = tmp_path_factory.mktemp("select_model")
+    csv_path = str(tmp_path / "summary.csv")
+    imp = _imputer(territories_df(spark), tmp_path)
+    summary = imp.select_model(
+        [
+            {
+                "classification": DecisionTreeClassifier(maxDepth=3),
+                "regression": DecisionTreeRegressor(maxDepth=3),
+                "check_separate_fit_transform_time": True,
+            },
+            {
+                "classification": RandomForestClassifier(numTrees=5),
+                "regression": RandomForestRegressor(numTrees=5),
+                "check_separate_fit_transform_time": False,
+            },
+        ],
+        path=csv_path,
+    )
+    return summary, csv_path
+
+
 def _imputer(df, tmp_path, **kw):
     defaults = dict(
         categorical=list(TERRITORIES_CATEGORICAL),
@@ -234,7 +284,7 @@ def test_fit_transform_no_nulls_invariant(territories, tmp_path, pair_name):
     assert sum("Join " in line for line in plan.splitlines()) == 1
 
 
-def test_fit_save_then_transform_and_validate(territories, tmp_path):
+def test_fit_save_then_transform_and_validate(territories, tmp_path, dt4_imputed):
     from pyspark.ml.classification import DecisionTreeClassifier
     from pyspark.ml.regression import DecisionTreeRegressor
 
@@ -255,12 +305,7 @@ def test_fit_save_then_transform_and_validate(territories, tmp_path):
 
     # fit(transform=True) and fit() + transform() share one impute path:
     # with a deterministic tree pair they give the same rows.
-    in_one = imp.fit(
-        classification=DecisionTreeClassifier(maxDepth=4),
-        regression=DecisionTreeRegressor(maxDepth=4),
-        transform=True,
-    )["imputed_data"]
-    assert sorted(in_one.collect()) == sorted(out["imputed_data"].collect())
+    assert sorted(dt4_imputed.collect()) == sorted(out["imputed_data"].collect())
 
     # Scores on the training table, pinned exactly: the tree pair is
     # deterministic, so a change in validate's feature pass, predict or
@@ -271,6 +316,70 @@ def test_fit_save_then_transform_and_validate(territories, tmp_path):
         "km2": {"mse": 10061.408854166666},
         "gdp_per_capita": {"mse": 508931451.85185176},
     }
+
+
+def test_pooled_fits_keep_the_callers_job_group(spark, territories, tmp_path):
+    """The fit pool's threads carry the caller's job group: fit submits the
+    same jobs, all in the group, whether it trains its 3 targets one by
+    one or from 4 threads."""
+    from pyspark.ml.classification import DecisionTreeClassifier
+    from pyspark.ml.regression import DecisionTreeRegressor
+
+    sc = spark.sparkContext
+    imp = _imputer(territories, tmp_path)
+    counts = {}
+    for parallelism in (1, 4):
+        group = f"fit_parallelism_{parallelism}"
+        sc.setJobGroup(group, f"fit(parallelism={parallelism})")
+        try:
+            imp.fit(
+                DecisionTreeClassifier(maxDepth=3),
+                DecisionTreeRegressor(maxDepth=3),
+                transform=True,
+                parallelism=parallelism,
+            )
+            counts[parallelism] = len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    assert counts[1] > 0
+    assert counts[4] == counts[1]
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["prediction", "rawPrediction", "probability", "__vec", "__label", "__raw__a"],
+)
+def test_reserved_column_names(spark, tmp_path, name):
+    """A data column may share a name with an MLlib output column: the
+    imputer's model columns are ``__``-prefixed. Names starting with
+    ``__`` are the imputer's own, so the constructor rejects them with a
+    ValueError naming the column."""
+    from pyspark.ml.classification import DecisionTreeClassifier
+    from pyspark.ml.regression import DecisionTreeRegressor
+
+    rows = [
+        (i, None if i % 5 == 0 else "xy"[i % 2], float(i), float(i % 3))
+        for i in range(20)
+    ]
+    df = spark.createDataFrame(rows, f"id long, a string, b double, `{name}` double")
+
+    def fit():
+        imp = SparkImputer(
+            df, categorical=["a"], save_models_to=str(tmp_path / "m"), id_col="id"
+        )
+        return imp.fit(
+            DecisionTreeClassifier(maxDepth=2), DecisionTreeRegressor(maxDepth=2),
+            transform=True,
+        )["imputed_data"]
+
+    if name.startswith("__"):
+        with pytest.raises(ValueError, match=f"reserved.*'{name}'"):
+            fit()
+        return
+    out = {r["id"]: r for r in fit().collect()}
+    assert len(out) == 20
+    assert all(r["a"] in ("x", "y") for r in out.values())
+    assert {i: r[name] for i, r in out.items()} == {i: float(i % 3) for i in range(20)}
 
 
 def test_nan_counts_as_missing(spark, tmp_path):
@@ -572,31 +681,8 @@ def test_round_column_integrality(territories, tmp_path):
     assert all(float(v) == int(v) for v in vals)
 
 
-def test_select_model_ranks(territories, tmp_path):
-    from pyspark.ml.classification import (
-        DecisionTreeClassifier,
-        RandomForestClassifier,
-    )
-    from pyspark.ml.regression import (
-        DecisionTreeRegressor,
-        RandomForestRegressor,
-    )
-
-    imp = _imputer(territories, tmp_path)
-    summary = imp.select_model(
-        [
-            {
-                "classification": DecisionTreeClassifier(maxDepth=3),
-                "regression": DecisionTreeRegressor(maxDepth=3),
-                "check_separate_fit_transform_time": False,
-            },
-            {
-                "classification": RandomForestClassifier(numTrees=5),
-                "regression": RandomForestRegressor(numTrees=5),
-                "check_separate_fit_transform_time": False,
-            },
-        ]
-    )
+def test_select_model_ranks(select_model_run):
+    summary, _ = select_model_run
     rows = summary.collect()
     assert len(rows) == 2
     cols = summary.columns
@@ -680,26 +766,12 @@ def test_readme_mixed_numeric_categoricals(spark, tmp_path):
         assert vals <= {0.0, 1.0}, f"{c} left the class domain: {vals}"
 
 
-def test_select_model_separate_timing(territories, tmp_path):
+def test_select_model_separate_timing(select_model_run):
     """check_separate_fit_transform_time=True exercises the save→transform
     rollout path, the model-size probe (S5), and the CSV checkpoint sink
     (S2)."""
-    from pyspark.ml.classification import DecisionTreeClassifier
-    from pyspark.ml.regression import DecisionTreeRegressor
-
-    imp = _imputer(territories, tmp_path)
-    csv_path = str(tmp_path / "summary.csv")
-    summary = imp.select_model(
-        [
-            {
-                "classification": DecisionTreeClassifier(maxDepth=3),
-                "regression": DecisionTreeRegressor(maxDepth=3),
-                "check_separate_fit_transform_time": True,
-            }
-        ],
-        path=csv_path,
-    )
-    row = summary.collect()[0]
+    summary, csv_path = select_model_run
+    [row] = [r for r in summary.collect() if "DecisionTree" in r["model"]]
     assert row["fit_function_time"] > 0
     assert row["user_rollout_time_transform"] > 0
     assert row["model_size"] > 0
@@ -720,18 +792,10 @@ def test_csv_report_sink(spark, territories, tmp_path):
     assert set(back.columns) == set(metrics.columns)
 
 
-def test_find_imputation_variance(spark, territories, tmp_path):
+def test_find_imputation_variance(dt4_imputed):
     """m identical datasets → zero between-imputation variance; differing
     datasets → positive variance for the differing variable."""
-    from pyspark.ml.classification import DecisionTreeClassifier
-    from pyspark.ml.regression import DecisionTreeRegressor
-
-    imp = _imputer(territories, tmp_path)
-    r1 = imp.fit(
-        classification=DecisionTreeClassifier(maxDepth=4),
-        regression=DecisionTreeRegressor(maxDepth=4),
-        transform=True,
-    )["imputed_data"]
+    r1 = dt4_imputed
     var = find_imputation_variance(
         {"m1": r1, "m2": r1}, list(TERRITORIES_CATEGORICAL), id_col="id"
     )

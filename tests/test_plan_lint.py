@@ -102,24 +102,6 @@ HEAVY_BUILD = {
 }
 
 
-# One plan build per query per module (r15, VERDICT r14 #1): the three
-# lint dimensions previously each rebuilt (and, for queries with eager
-# build-time materializations, re-EXECUTED) every registry plan — 3x the
-# suite cost for byte-identical plan strings. The cache preserves every
-# test and every assertion; only the redundant rebuilds are gone.
-@pytest.fixture(scope="module")
-def plan_of(spark, sf_smoke):
-    cache: dict[str, str] = {}
-
-    def get(name: str) -> str:
-        if name not in cache:
-            df = QUERIES[name](spark, sf_smoke)
-            cache[name] = df._jdf.queryExecution().executedPlan().toString()
-        return cache[name]
-
-    return get
-
-
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - HEAVY_BUILD))
 def test_no_unintended_cartesian_or_nested_loop(plan_of, name):
     plan = plan_of(name)

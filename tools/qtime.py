@@ -62,28 +62,24 @@ def main() -> None:
     )
     warm.write.format("noop").mode("overwrite").save()
 
-    def total_jobs() -> int:
-        # Total jobs ever submitted to this context — counts driver-pool
-        # jobs too (setJobGroup is thread-local, so a group-based count
-        # misses jobs submitted from helper threads).
-        return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
-
+    sc = spark.sparkContext
     for name in args.names:
         fn = QUERIES[name]
         samples = []
         jobs = []
         for rep in range(max(1, args.reps)):
-            # Jobs-per-entry (guide §1.5): delta of the DAGScheduler's
-            # total job counter across the run — every job the entry
-            # submitted, including eager-checkpoint and pool jobs.
-            spark.sparkContext.setJobDescription(f"qtime:{name}")
-            j0 = total_jobs()
+            # Jobs-per-entry (guide §1.5): the jobs of this rep's own job
+            # group — eager checkpoints included, and pool jobs too, since
+            # the registry's thread pools hand the group to their threads.
+            group = f"qtime:{name}:{rep}"
+            sc.setJobGroup(group, f"qtime:{name}")
             t0 = time.time()
             df = fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             samples.append(round(time.time() - t0, 3))
-            jobs.append(total_jobs() - j0)
-        spark.sparkContext.setJobDescription(None)
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
         if args.explain:
             d, suffix = args.explain.rsplit("/", 1)
             os.makedirs(d, exist_ok=True)
