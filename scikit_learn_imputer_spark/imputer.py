@@ -258,6 +258,13 @@ class SparkImputer:
         driver thread pool so the many small Spark jobs overlap instead of
         serializing on scheduling latency. Results are deterministic:
         imputation updates still apply in column order.
+
+        Results depend on the input's partition layout only up to float
+        summation order. MLlib's Logistic and Linear fits sum over the
+        training rows in partition order, so the same table in another
+        layout can move their continuous cells by about 1e-8 relative, and
+        a categorical cell only where two classes tie within that;
+        DecisionTree models give the same imputations.
         """
         start_overall = time.time()
 

@@ -14,23 +14,23 @@ implementation here is the two-pass partitioned fill:
    boundaries can differ between re-executions of the same plan, which
    would misalign the boundary aggregate with the final pass);
 2. one tiny aggregate — per (range-bucket, column) the earliest/latest
-   observed value — collected to the driver (one row per bucket,
-   O(buckets), never O(rows));
-3. cumulative carry-in (last observed in any earlier bucket) and
-   carry-back (first observed in any later bucket) computed driver-side
-   and broadcast-joined back on bucket id;
+   observed value — one row per bucket, O(buckets), never O(rows);
+3. carry-in (last observed in any earlier bucket) and carry-back (first
+   observed in any later bucket) as running windows over that aggregate,
+   broadcast-joined back on bucket id — all in the plan, so no value
+   leaves the JVM and the call submits only the boundary jobs;
 4. per-bucket windows (parallel across buckets) + coalesce:
    ffill-within-bucket, else carry-in, else bfill-within-bucket, else
    carry-back.
 
 The result is byte-identical to the global-window plan (the DuckDB oracle
 uses ``LAST_VALUE ... IGNORE NULLS`` over the global order) while every
-window stays partition-local.
+window over data rows stays partition-local.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -42,11 +42,10 @@ def ffill_bfill(
 ) -> DataFrame:
     """Forward- then backward-fill ``cols`` in the global order of
     ``order_col`` (which must be unique and non-null), without ever forming
-    a single global partition."""
-    spark = df.sparkSession
+    a single global partition of data rows."""
     cols = cols or [c for c in df.columns if c != order_col]
     original_cols = df.columns
-    n = num_partitions or spark.sparkContext.defaultParallelism
+    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
 
     # Order-column support: any numeric (including parameterized
     # decimal(p,s)), date, or timestamp. Bucketing needs a NUMERIC key for
@@ -94,48 +93,21 @@ def ffill_bfill(
         )
         aggs.append(F.max(observed).alias(f"__last_{c}"))
         aggs.append(F.min(observed).alias(f"__first_{c}"))
-    bounds = sorted(
-        part.groupBy("__pid").agg(*aggs).collect(), key=lambda r: r["__pid"]
+
+    # Carry-in is the last value observed in an earlier bucket, carry-back
+    # the first observed in a later one: running windows over the
+    # one-row-per-bucket aggregate (O(buckets) rows, never data). They stay
+    # in the plan; a collect would cost a job per call and pass
+    # timestamps through Python's local time, which is ambiguous in a DST fold.
+    def carry(agg_col: str, pid: Column) -> Column:
+        w = Window.orderBy(pid).rowsBetween(Window.unboundedPreceding, -1)
+        return F.last(F.col(agg_col).getField("v"), ignorenulls=True).over(w)
+
+    carry_df = part.groupBy("__pid").agg(*aggs).select(
+        "__pid",
+        *[carry(f"__last_{c}", F.asc("__pid")).alias(f"__ci_{c}") for c in cols],
+        *[carry(f"__first_{c}", F.desc("__pid")).alias(f"__cb_{c}") for c in cols],
     )
-
-    # Driver-side cumulative scan over the tiny boundary table.
-    carry_rows = []
-    last_seen: dict[str, object] = {c: None for c in cols}
-    carry_in: dict[int, dict[str, object]] = {}
-    for r in bounds:
-        carry_in[r["__pid"]] = dict(last_seen)
-        for c in cols:
-            s = r[f"__last_{c}"]
-            if s is not None:
-                last_seen[c] = s["v"]
-    next_seen: dict[str, object] = {c: None for c in cols}
-    carry_back: dict[int, dict[str, object]] = {}
-    for r in reversed(bounds):
-        carry_back[r["__pid"]] = dict(next_seen)
-        for c in cols:
-            s = r[f"__first_{c}"]
-            if s is not None:
-                next_seen[c] = s["v"]
-    for r in bounds:
-        pid = r["__pid"]
-        carry_rows.append(
-            tuple(
-                [pid]
-                + [carry_in[pid][c] for c in cols]
-                + [carry_back[pid][c] for c in cols]
-            )
-        )
-
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    field_types = {f.name: f.dataType for f in df.schema.fields}
-    carry_schema = StructType(
-        [StructField("__pid", IntegerType(), False)]
-        + [StructField(f"__ci_{c}", field_types[c], True) for c in cols]
-        + [StructField(f"__cb_{c}", field_types[c], True) for c in cols]
-    )
-    carry_df = spark.createDataFrame(carry_rows, carry_schema)
-
     joined = part.join(F.broadcast(carry_df), on="__pid", how="left")
 
     # Pass 2: partition-local windows — parallel, bounded memory. Both are

@@ -80,6 +80,62 @@ def test_ffill_all_null_column_stays_null(spark):
     assert all(r["v"] is None for r in out.collect())
 
 
+@pytest.mark.parametrize("num_partitions", [1, 2, 4])
+def test_ffill_bfill_carries_timestamps_through_the_dst_fold(
+    spark, monkeypatch, num_partitions
+):
+    """A timestamp carried across a bucket boundary keeps its instant.
+    2024-11-03 06:30 UTC is 01:30 EST, inside New York's repeated hour; a
+    round trip through Python's local-time datetimes turns it into 01:30
+    EDT (05:30 UTC), so the fill must not depend on the bucket count."""
+    import time
+
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        df = spark.range(10).select(
+            "id",
+            F.when(
+                F.col("id") == 4, F.lit("2024-11-03 06:30:00").cast("timestamp")
+            ).alias("v"),
+        )
+
+        def micros(out):
+            return sorted(out.select("id", F.unix_micros("v")).collect())
+
+        got = micros(ffill_bfill(df, "id", ["v"], num_partitions=num_partitions))
+        assert got == micros(ffill_bfill_global(df, "id", ["v"]))
+        assert {r[1] for r in got} == {1730615400000000}
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+
+
+def _job_count(sc, group, action):
+    sc.setJobGroup(group, group)
+    try:
+        action()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_ffill_bfill_submits_only_the_boundary_jobs(spark):
+    """The carries are part of the returned plan: building the fill runs
+    the boundary approxQuantile and nothing else."""
+    sc = spark.sparkContext
+    df = spark.range(10000).select(
+        "id", F.when(F.col("id") % 3 > 0, F.col("id") * 0.5).alias("v")
+    ).localCheckpoint(eager=True)
+    n = sc.defaultParallelism
+    probs = [i / n for i in range(1, n)]
+    quantile = _job_count(
+        sc, "fill_quantile", lambda: df.stat.approxQuantile("id", probs, 0.001)
+    )
+    fill = _job_count(sc, "fill_build", lambda: ffill_bfill(df, "id", ["v"]))
+    assert 0 < fill == quantile <= 2
+
+
 def test_one_hot_get_dummies_shape(spark):
     """Column naming and value-sorted order match pd.get_dummies
     (reference tests.py:192-196 expects Location_* in sorted order)."""

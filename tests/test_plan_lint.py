@@ -155,7 +155,7 @@ def test_no_buildtime_collects_in_query_registry():
 # sources, budgets) — never token- or document-sized data (VERDICT r11
 # #3). Every entry documents its bound; a new query that ranks a
 # data-sized frame through an unpartitioned window fails the lint until
-# it is either banded (operators/fill.py:147 / operators/shuffle.py:71 /
+# it is either banded (operators/fill.py:ffill_bfill / operators/shuffle.py:71 /
 # functions/stats.py:avg_rank band_width) or justified here.
 INTENDED_GLOBAL_WINDOW = {
     "avg_rank_suppliers",        # banded two-pass: offsets over O(#balance-bands)
@@ -195,6 +195,11 @@ INTENDED_GLOBAL_WINDOW = {
     "lm_score_deciles",          # offsets over O(#lm-score-bands)
     "bm25_source_relevance",     # offsets over O(#score-bands)
     "quality_model_holdout",     # offsets over O(#feature-bands) x6
+    # ffill_bfill (fill.py): carry-in/carry-back windows over the
+    # one-row-per-bucket first/last aggregate; the fill windows themselves
+    # are partitioned by bucket.
+    "ffill_bfill",       # carries over O(defaultParallelism) fill buckets
+    "create_features",   # carries over O(defaultParallelism) fill buckets
 }
 
 
@@ -268,7 +273,7 @@ def test_no_unpartitioned_window_over_unbounded_frame(plan_of, name):
     if name not in INTENDED_GLOBAL_WINDOW:
         assert k == 0, (
             f"{name}: {k} unpartitioned window(s) over a frame not "
-            f"whitelisted as bounded — band it (fill.py:147 / "
+            f"whitelisted as bounded — band it (fill.py:ffill_bfill / "
             f"shuffle.py:71 / stats.py:avg_rank band_width) or document "
             f"its bound in INTENDED_GLOBAL_WINDOW"
         )
