@@ -246,66 +246,45 @@ def minhash_candidate_pairs(
 # (VERDICT r14 #2/#3). Above this many pairs the frame must not be
 # broadcast into gram/doc joins: a stats-driven broadcast of a
 # corpus-growing candidate set OOMs the driver at scale (the sf1 @
-# default-heap failure). Env-overridable so the scale protocol can
-# probe both paths.
+# default-heap failure).
 CAND_BROADCAST_ROW_BOUND = 250_000
 
 
-def guarded_candidate_frame(cands: DataFrame) -> tuple[DataFrame, bool, bool]:
+def guarded_candidate_frame(cands: DataFrame) -> tuple[DataFrame, bool]:
     """Materialize a candidate-pair frame and guard it before it feeds
-    joins; returns ``(cands, large, restrict)``.
+    joins; returns ``(cands, large)``.
 
     Checkpoints ``cands`` (``localCheckpoint(eager=True)``: the frame is
     referenced more than once downstream, so its LSH join must run
     once), counts the checkpoint (one cheap scan of local blocks, no
     recompute — a bounded O(1)-driver-data action, the documented
-    library-collect contract) and, above the row bound:
+    library-collect contract) and, above ``CAND_BROADCAST_ROW_BOUND``,
+    attaches a ``merge`` hint so downstream joins route through
+    sort-merge instead of collecting a corpus-growing frame into a
+    driver-built broadcast (guide §3.1 — broadcast is for sides that
+    FIT; SMJ always works and spills gracefully).
 
-    - attaches a ``merge`` hint so downstream joins route through
-      sort-merge instead of collecting a corpus-growing frame into a
-      driver-built broadcast (guide §3.1 — broadcast is for sides that
-      FIT; SMJ always works and spills gracefully), and
-    - sets ``restrict``, asking the caller to pre-filter the gram/doc
-      side to candidate docs (guide §3.2 semi-join pre-filter): below
-      the bound the corpus is small enough that the restriction's
-      extra semi-join costs more than the grams it saves (measured
-      +0.6 s at sf0.1's 61% candidate coverage, r14), above it every
-      non-candidate doc is wasted shuffle bytes.
+    ``large`` asks the caller to:
 
-    The ``large`` flag tells the caller to ALSO merge-hint every other
-    pair-/candidate-bounded frame of its assembly: those grow with the
-    candidate set too, and AQE's runtime size estimates will otherwise
-    pick one as a broadcast build side (the sf1 OOM reproduces on the
-    intersection aggregate once the candidate frame itself is hinted).
+    - pre-filter the gram/doc side to candidate docs
+      (``candidate_doc_texts``, guide §3.2 semi-join pre-filter): below
+      the bound the corpus is small enough that the restriction's extra
+      semi-join costs more than the grams it saves (measured +0.6 s at
+      sf0.1's 61% candidate coverage, r14), above it every
+      non-candidate doc is wasted shuffle bytes; and
+    - merge-hint every other pair-/candidate-bounded frame of its
+      assembly: those grow with the candidate set too, and AQE's runtime
+      size estimates will otherwise pick one as a broadcast build side
+      (the sf1 OOM reproduces on the intersection aggregate once the
+      candidate frame itself is hinted).
 
-    ``SPARK_GRAFT_RESTRICT_CAND_GRAMS`` (0/1/auto) overrides the
-    restriction decision; ``SPARK_GRAFT_CAND_BROADCAST_ROW_BOUND``
-    overrides the bound. Results are join-strategy/pre-filter invariant
-    either way (the restricted docs are a superset of every id the
-    inner joins keep). Both are parsed before any job: a malformed
-    value raises a ``ValueError`` naming its variable."""
-    import os
-
-    raw = os.environ.get("SPARK_GRAFT_CAND_BROADCAST_ROW_BOUND")
-    try:
-        bound = CAND_BROADCAST_ROW_BOUND if raw is None else int(raw)
-    except ValueError:
-        raise ValueError(
-            f"SPARK_GRAFT_CAND_BROADCAST_ROW_BOUND must be an integer, "
-            f"got {raw!r}"
-        ) from None
-    mode = os.environ.get("SPARK_GRAFT_RESTRICT_CAND_GRAMS", "auto")
-    if mode not in ("0", "1", "auto"):
-        raise ValueError(
-            f"SPARK_GRAFT_RESTRICT_CAND_GRAMS must be 0, 1 or auto, "
-            f"got {mode!r}"
-        )
+    Results are join-strategy/pre-filter invariant either way (the
+    restricted docs are a superset of every id the inner joins keep)."""
     cands = cands.localCheckpoint(eager=True)
-    large = cands.count() > bound
+    large = cands.count() > CAND_BROADCAST_ROW_BOUND
     if large:
         cands = cands.hint("merge")
-    restrict = large if mode == "auto" else mode == "1"
-    return cands, large, restrict
+    return cands, large
 
 
 def candidate_doc_texts(d: DataFrame, cands: DataFrame) -> DataFrame:

@@ -28,9 +28,11 @@ Spark-first design decisions (NOT a port):
   column, so a target's train, test and impute rows are filters of it.
 - NaN in a float/double column (pandas' missing marker, so the reference's)
   is read as NULL wherever data enters: the constructor and ``validate``.
-- Models are MLlib Pipelines (VectorAssembler + user estimator), persisted
-  with MLlib writers + a JSON manifest instead of a joblib pickle
-  (reference :297).
+- A target's record holds the estimator's own fitted model and its
+  ``model_features`` (reference :297, :339-340); the feature vector is
+  assembled from that one list whenever the model is trained or applied.
+  The model is saved with its own MLlib writer and the records as a JSON
+  manifest instead of a joblib pickle.
 
 Documented divergences from reference behavior:
 - ``validate()`` scores against the validation_set's observed values — the
@@ -48,8 +50,10 @@ from __future__ import annotations
 import json
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from functools import reduce
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -254,10 +258,10 @@ class SparkImputer:
         and ``validate`` re-apply.
 
         Per-column models are INDEPENDENT (reference runs them in a
-        sequential loop, :216); ``parallelism`` > 1 trains them from a
-        driver thread pool so the many small Spark jobs overlap instead of
-        serializing on scheduling latency. Results are deterministic:
-        imputation updates still apply in column order.
+        sequential loop, :216); they train from a driver thread pool of up
+        to ``parallelism`` (≥ 1) threads so the many small Spark jobs
+        overlap instead of serializing on scheduling latency. Results are
+        deterministic: imputation updates still apply in column order.
 
         Results depend on the input's partition layout only up to float
         summation order. MLlib's Logistic and Linear fits sum over the
@@ -266,6 +270,8 @@ class SparkImputer:
         a categorical cell only where two classes tie within that;
         DecisionTree models give the same imputations.
         """
+        if parallelism < 1:
+            raise ValueError(f"parallelism must be at least 1, got {parallelism}")
         start_overall = time.time()
 
         observed = self._columns_with_missing()
@@ -294,22 +300,15 @@ class SparkImputer:
             record.update(n_train=n - k, n_test=k, n_imputed=missing)
             return record
 
-        if parallelism > 1 and len(to_impute) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            from pyspark import inheritable_thread_target
-
-            # The pool threads carry the caller's local properties (job
-            # group, description, scheduler pool), so cancelling the
-            # caller's group cancels the fits too.
-            target = inheritable_thread_target(features.sparkSession)(train)
-            with ThreadPoolExecutor(
-                max_workers=min(parallelism, len(to_impute))
-            ) as pool:
-                futures = {c: pool.submit(target, c) for c in to_impute}
-                trained_models = {c: f.result() for c, f in futures.items()}
-        else:
-            trained_models = {c: train(c) for c in to_impute}
+        # The pool threads carry the caller's local properties (job group,
+        # description, scheduler pool), so cancelling the caller's group
+        # cancels the fits too.
+        target = inheritable_thread_target(features.sparkSession)(train)
+        with ThreadPoolExecutor(
+            max_workers=max(1, min(parallelism, len(to_impute)))
+        ) as pool:
+            futures = {c: pool.submit(target, c) for c in to_impute}
+            trained_models = {c: f.result() for c, f in futures.items()}
 
         trained_models["global_scaler"] = {"type": "minmax", "columns": feat_cols}
         if transform:
@@ -328,9 +327,6 @@ class SparkImputer:
     ) -> dict:
         """Train + hold-out-score the model for one target column; a
         categorical target's labels are its feature-pass domain."""
-        from pyspark.ml import Pipeline
-        from pyspark.ml.feature import VectorAssembler
-
         is_cat = column in self.categorical
         # Leakage prune replicates the reference's SUBSTRING semantics
         # (reference :236 — drops the target, its one-hot/flag derivatives,
@@ -352,9 +348,6 @@ class SparkImputer:
             self._labels(features, column, labels), test_size, random_seed,
             self.id_col,
         )
-        assembler = VectorAssembler(
-            inputCols=model_features, outputCol="__vec", handleInvalid="keep"
-        )
         spec = classification if is_cat else regression
         est = _resolve_estimator(spec, column).copy()
         est = _reserve_outputs(est.setFeaturesCol("__vec").setLabelCol("__label"))
@@ -372,16 +365,16 @@ class SparkImputer:
                 [len(model_features), max(4, 2 * len(labels)), len(labels)]
             )
 
-        pipeline_model = Pipeline(stages=[assembler, est]).fit(train)
+        model = est.fit(_assemble(train, model_features))
 
         start_test = time.time()
         model_performance = _score(
-            self._predict(column, pipeline_model, test), is_cat
+            self._predict(column, model, model_features, test), is_cat
         )
         test_time = time.time() - start_test
 
         return {
-            "trained_model": pipeline_model,
+            "trained_model": model,
             "model_features": model_features,
             "label_encoder": labels,
             "test_time": test_time,
@@ -398,15 +391,22 @@ class SparkImputer:
             return rows.withColumn("__label", F.col(raw).cast("double"))
         return label_encode(rows, raw, labels=labels, out_col="__label")[0]
 
-    def _predict(self, column, model, rows: DataFrame) -> DataFrame:
-        """``rows`` with the model's prediction (``__prediction``), rounded
-        half-to-even (np.round, reference :251) for round columns. The
-        model's assembler reads exactly its saved feature list (reference
-        :339-340, SURVEY.md P10)."""
+    def _predict(self, column, model, features, rows: DataFrame) -> DataFrame:
+        """``rows`` with the model's prediction (``__prediction``) from
+        exactly its ``features`` (reference :339-340, SURVEY.md P10),
+        rounded half-to-even (np.round, reference :251) for round columns.
+        A feature ``rows`` lacks raises a ``ValueError`` naming it (the
+        reference's ``X[model_features]`` raises a KeyError)."""
+        missing = [c for c in features if c not in rows.columns]
+        if missing:
+            raise ValueError(
+                f"the model for column '{column}' needs feature columns the "
+                f"data does not have: {missing}"
+            )
         pred = F.col(_PRED)
         if column in self.round_column:
             pred = F.bround(pred)
-        return model.transform(rows).withColumn(_PRED, pred)
+        return model.transform(_assemble(rows, features)).withColumn(_PRED, pred)
 
     def _impute(self, features: DataFrame, records: dict, columns) -> DataFrame:
         """Predict each column on its own NULL rows (reference :261-272),
@@ -418,7 +418,7 @@ class SparkImputer:
             start = time.time()
             record = records[column]
             pred = self._predict(
-                column, record["trained_model"],
+                column, record["trained_model"], record["model_features"],
                 features.filter(F.col(_RAW + column).isNull()),
             )
             if record["label_encoder"] is not None:
@@ -438,8 +438,8 @@ class SparkImputer:
         return scatter_update(self.input_data, updates, self.id_col, columns)
 
     def _save_models(self, trained_models: dict, columns: list[str]) -> None:
-        """MLlib writers + JSON manifest replace the joblib pickle
-        (reference :297 / SURVEY.md S3)."""
+        """Each model's own MLlib writer + a JSON manifest of the records
+        replace the joblib pickle (reference :297 / SURVEY.md S3)."""
         os.makedirs(self.save_models_to, exist_ok=True)
         manifest: dict = {
             "columns": columns,
@@ -462,16 +462,23 @@ class SparkImputer:
             json.dump(manifest, f, indent=2)
 
     def _load_models(self, data: DataFrame) -> dict:
-        """The saved records of the columns ``data`` has, in saved order."""
-        from pyspark.ml import PipelineModel
+        """The saved records of the columns ``data`` has, in saved order.
+        ``loadParamsInstance`` reads each model's class from its saved
+        metadata, so MLlib and this package's Python models load alike.
+        The outputs are pointed at the reserved columns again, because a
+        saved OneVsRestModel forgets its ``rawPredictionCol``."""
+        from pyspark.ml.util import DefaultParamsReader
 
+        spark = data.sparkSession
         with open(os.path.join(self.save_models_to, "manifest.json")) as f:
             manifest = json.load(f)
         out = {}
         for column in manifest["columns"]:
             if column in data.columns:
                 rec = dict(manifest[column])
-                rec["trained_model"] = PipelineModel.load(rec["model_dir"])
+                rec["trained_model"] = _reserve_outputs(
+                    DefaultParamsReader.loadParamsInstance(rec["model_dir"], spark)
+                )
                 out[column] = rec
         return out
 
@@ -534,7 +541,7 @@ class SparkImputer:
         for column, record in records.items():
             start = time.time()
             preds = self._predict(
-                column, record["trained_model"],
+                column, record["trained_model"], record["model_features"],
                 self._labels(features, column, record["label_encoder"]),
             )
             output[column] = {
@@ -652,6 +659,16 @@ def _checked_input(data: DataFrame, id_col: str) -> DataFrame:
         )
     floats = [c for c, t in data.dtypes if t in ("float", "double")]
     return data.withColumns({c: F.when(~F.isnan(c), F.col(c)) for c in floats})
+
+
+def _assemble(rows: DataFrame, features: list[str]) -> DataFrame:
+    """``rows`` with ``features`` assembled into the models' input vector
+    ``__vec``; a NULL cell becomes NaN (``handleInvalid="keep"``)."""
+    from pyspark.ml.feature import VectorAssembler
+
+    return VectorAssembler(
+        inputCols=features, outputCol="__vec", handleInvalid="keep"
+    ).transform(rows)
 
 
 def _score(preds: DataFrame, is_cat: bool) -> dict:

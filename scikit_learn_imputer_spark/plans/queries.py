@@ -10027,7 +10027,7 @@ def q_minhash_precision_audit(spark, sf_dir):
     # halves the LSH join. Above the row bound the guard forbids
     # broadcasting it and restricts the gram explode to candidate docs
     # (see dedup.minhash.guarded_candidate_frame; VERDICT r14 #2/#3).
-    cands, large, restrict = guarded_candidate_frame(cands)
+    cands, large = guarded_candidate_frame(cands)
     # Exact intersections WITHOUT the (pair × gram) equi-join: each
     # doc's distinct 5-gram SET is a map-only array projection (bounded
     # by text length — no skew hazard), each candidate pair joins to
@@ -10037,7 +10037,7 @@ def q_minhash_precision_audit(spark, sf_dir):
     # than one row per pair (guide §2.3/§8 — move set membership as a
     # bounded payload once, not as an exploded row stream). Counts are
     # identical: char_ngrams explodes this same distinct array.
-    gsets = fan_out(candidate_doc_texts(d, cands) if restrict else d).select(
+    gsets = fan_out(candidate_doc_texts(d, cands) if large else d).select(
         "doc_id", ngram_set_col("text", 5).alias("__gs")
     )
     ja = gsets.select(
@@ -12677,8 +12677,8 @@ def q_minhash_calibration(spark, sf_dir):
     # r14 #2/#3), and the intersections are row-local array_intersects
     # of per-doc gram sets — no (pair × gram) intermediate (see the
     # precision audit's design note).
-    cands, large, restrict = guarded_candidate_frame(cands)
-    gsets = fan_out(candidate_doc_texts(d, cands) if restrict else d).select(
+    cands, large = guarded_candidate_frame(cands)
+    gsets = fan_out(candidate_doc_texts(d, cands) if large else d).select(
         "doc_id", ngram_set_col("text", 5).alias("__gs")
     )
     ja = gsets.select(

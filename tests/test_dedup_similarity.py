@@ -394,27 +394,6 @@ def test_unguarded_sentinel_equals_guarded_path(spark):
     assert "LeftSemi" not in sh_sentinel._jdf.queryExecution().executedPlan().toString()
 
 
-@pytest.mark.parametrize(
-    "var, value",
-    [
-        ("SPARK_GRAFT_CAND_BROADCAST_ROW_BOUND", "250k"),
-        ("SPARK_GRAFT_RESTRICT_CAND_GRAMS", "yes"),
-    ],
-)
-def test_guarded_candidate_frame_rejects_malformed_env(monkeypatch, var, value):
-    """A malformed override raises a ValueError naming its variable before
-    the guard counts the candidate frame, so no job runs."""
-    from scikit_learn_imputer_spark.dedup.minhash import guarded_candidate_frame
-
-    class NoJobs:
-        def count(self):
-            raise AssertionError("counted before the overrides were parsed")
-
-    monkeypatch.setenv(var, value)
-    with pytest.raises(ValueError, match=var):
-        guarded_candidate_frame(NoJobs())
-
-
 def test_incremental_dedup_commit_then_empty(spark, tmp_path):
     """Probe-commit-reprobe invariant: a committed batch probes to zero
     survivors, and a later batch dedups against BOTH the original store

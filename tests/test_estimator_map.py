@@ -45,10 +45,10 @@ def test_fit_with_per_column_regressor_map(spark):
         transform=True,
         parallelism=1,
     )
-    stage = lambda c: type(res[c]["trained_model"].stages[-1]).__name__
-    assert stage("km2") == "DecisionTreeRegressionModel"
-    assert stage("gdp_per_capita") == "LinearRegressionModel"
-    assert stage("Location") == "LogisticRegressionModel"
+    model = lambda c: type(res[c]["trained_model"]).__name__
+    assert model("km2") == "DecisionTreeRegressionModel"
+    assert model("gdp_per_capita") == "LinearRegressionModel"
+    assert model("Location") == "LogisticRegressionModel"
     nulls = res["imputed_data"].filter(
         "Location IS NULL OR km2 IS NULL OR gdp_per_capita IS NULL"
     ).count()
@@ -165,9 +165,9 @@ def test_knn_model_persistence_roundtrip(spark, tmp_path):
 
 
 def test_imputer_save_load_transform_with_knn_pair(spark):
-    """fit(transform=False) persists PipelineModels whose last stage is a
-    CUSTOM Python model (KNN*Model); transform() must reflection-load them
-    through MLlib's PipelineModel.load and impute to zero nulls."""
+    """fit(transform=False) saves the CUSTOM Python models (KNN*Model)
+    themselves; transform() must reload them through
+    DefaultParamsReader.loadParamsInstance and impute to zero nulls."""
     from scikit_learn_imputer_spark.estimators import KNNClassifier, KNNRegressor
 
     imp = _imputer(spark)
@@ -182,6 +182,21 @@ def test_imputer_save_load_transform_with_knn_pair(spark):
         "Location IS NULL OR km2 IS NULL OR gdp_per_capita IS NULL"
     ).count()
     assert nulls == 0
+
+
+def test_imputer_save_load_transform_with_one_vs_rest(spark):
+    """A saved OneVsRestModel forgets its rawPredictionCol. Reloaded by
+    transform(), it still reads its sub-models' reserved output column and
+    imputes the rows fit(transform=True) does."""
+    from pyspark.ml.classification import LogisticRegression, OneVsRest
+    from pyspark.ml.regression import DecisionTreeRegressor
+
+    imp = _imputer(spark)
+    clf = OneVsRest(classifier=LogisticRegression(maxIter=5))
+    reg = DecisionTreeRegressor(maxDepth=3)
+    fitted = imp.fit(clf, reg, transform=True)["imputed_data"].collect()
+    imp.fit(clf, reg)
+    assert sorted(imp.transform()["imputed_data"].collect()) == sorted(fitted)
 
 
 def test_imputer_e2e_with_knn_pair(spark):

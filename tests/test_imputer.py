@@ -366,6 +366,89 @@ def test_pooled_fits_keep_the_callers_job_group(spark, territories, tmp_path):
     assert counts[4] == counts[1]
 
 
+def test_parallelism_below_one_raises(spark, territories, tmp_path):
+    """``parallelism`` sizes the fit pool; below 1 it raises a ValueError
+    naming it before any job runs."""
+    from pyspark.ml.classification import DecisionTreeClassifier
+    from pyspark.ml.regression import DecisionTreeRegressor
+
+    sc = spark.sparkContext
+    imp = _imputer(territories, tmp_path)
+    sc.setJobGroup("fit_parallelism_0", "fit(parallelism=0)")
+    try:
+        with pytest.raises(ValueError, match="parallelism"):
+            imp.fit(
+                DecisionTreeClassifier(maxDepth=3),
+                DecisionTreeRegressor(maxDepth=3),
+                parallelism=0,
+            )
+        assert sc.statusTracker().getJobIdsForGroup("fit_parallelism_0") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_persistence_job_budget(spark, territories, tmp_path):
+    """A target's directory holds only its estimator's model, and its
+    feature list lives once, in the manifest: saving the 3 Logistic/Linear
+    targets submits at most 6 jobs and loading them back at most 12."""
+    from pyspark.ml.classification import LogisticRegression
+    from pyspark.ml.regression import LinearRegression
+
+    sc = spark.sparkContext
+    imp = _imputer(territories, tmp_path)
+    fitted = imp.fit(
+        LogisticRegression(maxIter=25), LinearRegression(maxIter=25),
+        transform=True,
+    )
+    targets = ["Location", "km2", "gdp_per_capita"]
+
+    def jobs_of(group, run):
+        sc.setJobGroup(group, group)
+        try:
+            result = run()
+            return result, len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    _, save_jobs = jobs_of("persistence_save", lambda: imp._save_models(fitted, targets))
+    loaded, load_jobs = jobs_of("persistence_load", lambda: imp._load_models(territories))
+    assert 0 < save_jobs <= 6
+    assert 0 < load_jobs <= 12
+    for c in targets:
+        assert sorted(os.listdir(loaded[c]["model_dir"])) == ["data", "metadata"]
+        assert type(loaded[c]["trained_model"]) is type(fitted[c]["trained_model"])
+        assert loaded[c]["model_features"] == fitted[c]["model_features"]
+
+
+@pytest.fixture(scope="module")
+def dt_saved(spark, tmp_path_factory):
+    """The save directory of one DecisionTree(maxDepth=3) ``fit()`` on
+    territories."""
+    from pyspark.ml.classification import DecisionTreeClassifier
+    from pyspark.ml.regression import DecisionTreeRegressor
+
+    tmp_path = tmp_path_factory.mktemp("dt_saved")
+    _imputer(territories_df(spark), tmp_path).fit(
+        DecisionTreeClassifier(maxDepth=3), DecisionTreeRegressor(maxDepth=3)
+    )
+    return tmp_path
+
+
+@pytest.mark.parametrize("step", ["validate", "transform"])
+def test_saved_feature_missing_from_the_data_raises(territories, dt_saved, step):
+    """The rows with id < 12 have no 'Antartica' or 'Oceania' Location, so
+    their feature pass lacks those one-hot columns. A saved model that reads
+    them raises a ValueError naming its target and the missing columns, as
+    the reference's ``X[model_features]`` raises a KeyError."""
+    subset = territories.filter("id < 12")
+    missing = r"\['Location_Antartica', 'Location_Oceania'\]"
+    with pytest.raises(ValueError, match=f"'km2'.*{missing}"):
+        if step == "validate":
+            _imputer(territories, dt_saved).validate(subset)
+        else:
+            _imputer(subset, dt_saved).transform()
+
+
 @pytest.mark.parametrize(
     "name",
     ["prediction", "rawPrediction", "probability", "__vec", "__label", "__raw__a"],
