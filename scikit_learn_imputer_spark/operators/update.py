@@ -7,9 +7,13 @@ cells, leaving every other cell untouched. The reference assigns one column
 at a time; here every updated column rides one join.
 
 Scale notes: expressed as a key equi-join + coalesce. The updates side is
-only the rows with a missing cell (a small fraction of the table), so it
-is broadcast when below the hint threshold — no shuffle of the base table.
-With a large updates side, Catalyst/AQE falls back to a shuffled hash join on the id.
+always broadcast: ``F.broadcast`` is a join hint that Spark honours
+whatever the side's size, so there is no fallback to a shuffled join.
+That is the intended trade, because the updates side holds only the rows
+with a missing cell (a small fraction of the table) and broadcasting it
+avoids a shuffle of the base table. Without the hint the optimizer would
+plan a SortMergeJoin whenever its size estimate of the updates side
+exceeds the broadcast threshold.
 """
 
 from __future__ import annotations

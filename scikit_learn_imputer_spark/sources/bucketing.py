@@ -10,7 +10,7 @@ write-once/join-many amortization. The helper writes through
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -24,9 +24,3 @@ def write_bucketed(
     if sort:
         writer = writer.sortBy(bucket_col)
     writer.format("parquet").saveAsTable(table)
-
-
-def bucketed_join_ready(spark: SparkSession, table_a: str, table_b: str, on) -> DataFrame:
-    """Join two same-bucketed tables on their bucket key; with matching
-    bucket counts the physical plan has no Exchange (verify via explain)."""
-    return spark.table(table_a).join(spark.table(table_b), on=on)

@@ -122,14 +122,3 @@ def read_layout(spark: SparkSession, path: str) -> DataFrame:
     in PushedFilters and skip files (footer min/max) and row groups
     (page-index stats) — verify with ``scan_files_matching``."""
     return spark.read.parquet(path)
-
-
-def scan_selectivity(spark: SparkSession, path: str, predicate: str) -> dict:
-    """Diagnostic: rows scanned vs rows matched for a predicate over the
-    layout — at perfect skipping, scanned approaches matched. (Local
-    helper for tests/benchmarks; on a cluster read the scan node's
-    metrics instead.)"""
-    df = read_layout(spark, path)
-    matched = df.filter(predicate).count()
-    total = df.count()
-    return {"total_rows": total, "matched_rows": matched}
